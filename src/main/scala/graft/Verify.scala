@@ -1,24 +1,17 @@
 package graft
-import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. Session and
-  * JSON plumbing shared with tools.QueryRun via tools.DriverSession. */
+  * plus oracle_sql.json, for the DuckDB oracle compare. Session, sweep
+  * and JSON plumbing shared with the other mains via tools.DriverSession
+  * and tools.Sweep. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = graft.tools.DriverSession.build(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val spark = graft.tools.DriverSession.build(graft.tools.DriverSession.cpus)
     new java.io.File(outDir).mkdirs()
-    // release each memo family's cache once its last consumer is done
-    // (bounds sweep-wide storage residency — see tools.SweepCaches)
-    val caches = new graft.tools.SweepCaches.Tracker
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      caches.done(name)
+    graft.tools.Sweep.run(spark, sfDir, SparkEntry.queries.toSeq) { (name, df) =>
+      df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+    }.filterNot(_.ok).foreach { r =>
+      System.err.println(s"[verify] ${r.name} failed: ${r.error.get}")
     }
     graft.tools.DriverSession.writeOracleJson(
       s"$outDir/oracle_sql.json", SparkEntry.oracleSql)

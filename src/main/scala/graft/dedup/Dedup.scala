@@ -1490,7 +1490,7 @@ object Dedup {
       .withColumn("dist", levenshtein($"ka", $"kb", EdMaxDist))
       .filter($"dist" >= 0 && $"dist" <= EdMaxDist) // -1 = beyond band
       .select($"doc_a", $"doc_b", $"dist")
-    // checkpoint=false is for PLAN INSPECTION only (tools.Plans): the
+    // checkpoint=false is for PLAN INSPECTION only (tools.PlanDump): the
     // caches release immediately, so executing that plan recomputes
     if (!checkpoint) { keys.unpersist(); return out }
     val cp = out.localCheckpoint()

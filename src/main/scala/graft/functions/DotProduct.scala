@@ -1,7 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, TypeCheckResult}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -64,27 +65,31 @@ case class DotProduct(left: Expression, right: Expression)
 }
 
 object GraftFunctions {
-  /** Idempotent session registration of graft's native functions. */
+  /** Every native graft function as (SQL name, builder). The one table
+    * both registration paths read: [[register]] (per session, from
+    * Scala) and [[GraftExtensions]] (config-only, at session build). */
+  val table: Seq[(String, FunctionRegistry.FunctionBuilder)] = Seq(
+    "graft_dot" -> (e => DotProduct(e(0), e(1))),
+    "graft_nibble_l1" -> (e => NibbleL1(e(0), e(1))),
+    "graft_char_hist" -> (e => CharHistWord(e(0), e(1))),
+    "graft_srp_words" -> (e => SrpWords(e(0), e(1))),
+    "graft_h32" -> (e => H32(e(0))),
+    "graft_top_cells" -> (e => TopCells(e(0), e(1), e(2))),
+    "graft_quant" -> (e => QuantCodes(e(0), e(1))),
+    "graft_vdiv" -> (e => VecDiv(e(0), e(1))),
+    "graft_word_grams" -> (e => WordGrams(e(0), e(1))))
+
+  /** Registers every [[table]] function the session does not already
+    * have, so the per-operator calls (every `Tables()` construction and
+    * the streaming/DataFrame-input paths) cost a lookup after the first:
+    * replacing a registered function logs a FunctionRegistry WARN each
+    * time, which was nearly every log line of a full sweep. */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", exprs => DotProduct(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_nibble_l1", exprs => NibbleL1(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_char_hist", exprs => CharHistWord(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_srp_words", exprs => SrpWords(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_h32", exprs => H32(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_top_cells", exprs => TopCells(exprs(0), exprs(1), exprs(2)),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_quant", exprs => QuantCodes(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vdiv", exprs => VecDiv(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_word_grams", exprs => WordGrams(exprs(0), exprs(1)), "scala_udf")
+    val registry = spark.sessionState.functionRegistry
+    table.foreach { case (name, builder) =>
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "scala_udf")
+    }
   }
 
   /** Column accessor for [[NibbleL1]] (requires register() first). */

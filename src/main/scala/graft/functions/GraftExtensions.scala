@@ -10,48 +10,17 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   *
   *   spark.sql.extensions=graft.functions.GraftExtensions
   *
-  * (or programmatically: SparkSession.builder().withExtensions(new
-  * GraftExtensions)). Equivalent to calling GraftFunctions.register on
-  * each session, but survives session cloning and applies to pure-SQL
-  * clients that never touch Scala code.
+  * (or programmatically, via the session builder's withExtensions).
+  * Injects the same [[GraftFunctions.table]] entries
+  * GraftFunctions.register installs on a session, but survives session
+  * cloning and applies to pure-SQL clients that never touch Scala code.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        DotProduct(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_nibble_l1"),
-      new ExpressionInfo(classOf[NibbleL1].getName, "graft_nibble_l1"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        NibbleL1(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_char_hist"),
-      new ExpressionInfo(classOf[CharHistWord].getName, "graft_char_hist"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        CharHistWord(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_h32"),
-      new ExpressionInfo(classOf[H32].getName, "graft_h32"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        H32(exprs(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_top_cells"),
-      new ExpressionInfo(classOf[TopCells].getName, "graft_top_cells"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        TopCells(exprs(0), exprs(1), exprs(2))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_srp_words"),
-      new ExpressionInfo(classOf[SrpWords].getName, "graft_srp_words"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        SrpWords(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_quant"),
-      new ExpressionInfo(classOf[QuantCodes].getName, "graft_quant"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        QuantCodes(exprs(0), exprs(1))))
+    GraftFunctions.table.foreach { case (name, builder) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, name), builder))
+    }
     // plan-level df rule: whole-partition COUNT windows become
     // aggregate + null-safe join (see CountWindowToJoin scaladoc)
     ext.injectOptimizerRule(_ => graft.plans.CountWindowToJoin)

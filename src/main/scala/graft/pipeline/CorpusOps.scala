@@ -382,7 +382,7 @@ object CorpusOps {
           .as("clean_text"),
         size($"toks").cast(LongType).as("n_words"),
         (size($"toks") - size($"keep")).cast(LongType).as("n_removed"))
-    // checkpoint=false is for PLAN INSPECTION only (tools.Plans)
+    // checkpoint=false is for PLAN INSPECTION only (tools.PlanDump)
     if (!checkpoint) { spans.unpersist(); return out }
     val cp = out.localCheckpoint()
     spans.unpersist()
@@ -482,7 +482,7 @@ object CorpusOps {
     })
 
   /** The live plan behind the memo — the plan-audit surfaces
-    * (tools.Plans, ScaleSpec's no-forced-broadcast pin) must inspect
+    * (tools.PlanDump, ScaleSpec's no-forced-broadcast pin) must inspect
     * THIS form: the memoized [[contamination]] analyzes to a
     * LogicalRDD, which would pass any plan assertion vacuously. */
   private[graft] def contaminationUncached(t: Tables): DataFrame = {

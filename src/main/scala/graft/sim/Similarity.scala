@@ -1212,7 +1212,7 @@ object Similarity {
       .withColumn("cos", dot(col("vp"), col("vc")) / (col("np") * col("nc")))
       .filter(col("cos") >= minCos)
       .select(col("probe_id"), col("cand_id"), col("cos"))
-    // checkpoint=false is for plan review only (tools.Plans): it skips
+    // checkpoint=false is for plan review only (tools.PlanDump): it skips
     // the materialization so the explain shows the real pipeline. The
     // cell-assignment cache is released on BOTH paths (r19 advisor):
     // the returned plan just recomputes it lazily if executed.
@@ -1285,7 +1285,7 @@ object Similarity {
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= 5)
       .select(col("probe_id"), col("cand_id"), col("rnk"), col("cos"))
-    // checkpoint=false is for plan review only (tools.Plans): it skips
+    // checkpoint=false is for plan review only (tools.PlanDump): it skips
     // the materialization so the explain shows the real pipeline. The
     // cell-assignment cache is released on BOTH paths (r19 advisor):
     // the returned plan just recomputes it lazily if executed.

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.io.Tables
 import graft.sim.Similarity
 
@@ -25,14 +24,7 @@ object AnnProbeScan {
     val nlists = (if (args.length > 1) args(1) else "16").split(",").map(_.trim.toInt)
     val nprobes = (if (args.length > 2) args(2) else "8,10,12").split(",").map(_.trim.toInt)
     val assigns = (if (args.length > 3) args(3) else "").split(",").filter(_.nonEmpty).map(_.trim.toInt)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DriverSession.build(DriverSession.cpus)
     val t = Tables(spark, dir)
     def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -80,15 +72,7 @@ object AnnProbeScan {
     val pm = if (rest.length > 1) rest(1).toInt else 1300
     val npSweep = if (rest.length > 2)
       rest(2).split(",").map(_.trim.toInt).toSeq else Seq.empty[Int]
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Quiet.windowWarn()
+    val spark = DriverSession.build(DriverSession.cpus)
     val t = Tables(spark, dir)
     val n = Similarity.corpusSize(t)
     val nl = Similarity.nlistFor(n)
@@ -140,14 +124,7 @@ object AnnProbeScan {
     val dir = rest.headOption.getOrElse("/tmp/gen_nd1000c")
     val pm = if (rest.length > 1) rest(1).toInt else 130
     val np = if (rest.length > 2) rest(2).toInt else 8
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DriverSession.build(DriverSession.cpus)
     val t = Tables(spark, dir)
     val n = Similarity.corpusSize(t)
     val tm = System.nanoTime()
@@ -184,15 +161,7 @@ object AnnProbeScan {
     val dir = rest.headOption.getOrElse("/root/testdata/sf0.1")
     val target = if (rest.length > 1) rest(1).toDouble else 0.97
     val pm = if (rest.length > 2) rest(2).toInt else 0
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Quiet.windowWarn()
+    val spark = DriverSession.build(DriverSession.cpus)
     val t = Tables(spark, dir)
     val n = Similarity.corpusSize(t)
     val nl = Similarity.nlistFor(n)
@@ -214,15 +183,7 @@ object AnnProbeScan {
     */
   private def staleDemo(rest: Array[String]): Unit = {
     val dir = rest.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Quiet.windowWarn()
+    val spark = DriverSession.build(DriverSession.cpus)
     val t = Tables(spark, dir)
     def report(tag: String, df: org.apache.spark.sql.DataFrame): Unit = {
       val r = df.select("recall", "refit").head()

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.io.Tables
@@ -20,14 +19,8 @@ object CellAudit {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val aOver = if (args.length > 1) args(1).toInt else 0
     val minCos = if (args.length > 2) args(2).toDouble else 0.9
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "256")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DriverSession.build(DriverSession.cpus)
+    spark.conf.set("spark.sql.shuffle.partitions", "256")
     import spark.implicits._
     val t = Tables(spark, dir)
     val n = Similarity.corpusSize(t)

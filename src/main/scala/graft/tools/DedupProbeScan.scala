@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.io.Tables
@@ -57,20 +57,13 @@ object DedupProbeScan {
         "image", "audio", "embedding", "semantic")
     val restricted = fams0.contains("restricted")
     val fams = fams0 - "restricted"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      // 256, not the suite's 32: decade corpora push ~5e8-row candidate
-      // distincts through single stages; 32 fat partitions at ~1 GB
-      // execution memory each is exactly the UNABLE_TO_ACQUIRE_MEMORY
-      // shape (observed at the nd100 banded semantic run, r18) — the
-      // instrument wants many small tasks, AQE coalesces the tiny ones
-      .config("spark.sql.shuffle.partitions", "256")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Quiet.windowWarn()
+    val spark = DriverSession.build(DriverSession.cpus)
+    // 256, not the session's cpus: decade corpora push ~5e8-row candidate
+    // distincts through single stages; 32 fat partitions at ~1 GB
+    // execution memory each is exactly the UNABLE_TO_ACQUIRE_MEMORY
+    // shape (observed at the nd100 banded semantic run, r18) — the
+    // instrument wants many small tasks, AQE coalesces the tiny ones
+    spark.conf.set("spark.sql.shuffle.partitions", "256")
     val t = Tables(spark, dir)
     run(t, plantedMod, randomMod, embMod, fams, restricted)
     spark.stop()

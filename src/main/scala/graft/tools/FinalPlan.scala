@@ -1,11 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints the FINAL adaptive plan (post-execution) of named
   * SparkEntry queries, with per-node SQL metrics — the executed-plan
   * twin of PlanDump (whose pre-execution dump can't show AQE's join
-  * strategy picks or runtime row counts).
+  * strategy picks or runtime row counts). Uses PlanDump's query forms,
+  * so a pair family shows its real join, not a LogicalRDD scan.
   *
   * Usage: FinalPlan <sfDir> <query...>
   */
@@ -13,18 +12,13 @@ object FinalPlan {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: FinalPlan <sfDir> <query...>")
     val sfDir = args.head
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = DriverSession.build(DriverSession.cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    graft.tools.Quiet.windowWarn()
     args.drop(1).foreach { name =>
-      val df = graft.SparkEntry.queries(name)(spark, sfDir)
-      df.count()
+      val df = PlanDump.query(spark, sfDir, name)
+      // execute df's OWN plan: count()/foreach plan a different query
+      // and would leave this one at isFinalPlan=false
+      df.queryExecution.toRdd.foreach(_ => ())
       println(s"===== $name (final adaptive plan) =====")
       println(df.queryExecution.executedPlan.toString)
       // per-node metrics: walk the final plan and print non-zero rows/time

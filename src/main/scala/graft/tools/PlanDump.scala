@@ -32,8 +32,23 @@ object PlanDump {
       "dedup_edit_distance" -> (t => graft.dedup.Dedup.editDistance(t, checkpoint = false)),
       "dedup_containment" -> (t => graft.dedup.Dedup.containment(t, checkpoint = false)),
       "dedup_ngram_jaccard" -> (t => graft.dedup.Dedup.ngramJaccard(t, checkpoint = false)),
+      "corpus_scrub_spans" -> (t => graft.pipeline.CorpusOps.scrubSpans(t, checkpoint = false)),
       "ann_lsh" -> (t => graft.sim.Similarity.annLsh(t, checkpoint = false)),
+      // IVF retrieval family: the probe-cell assignment must read as a
+      // Generate(explode(graft_top_cells)) narrow map — a Window/Sort
+      // here is the defect-4 (N/13)·nlist vector-wide regression
+      "ann_ivf" -> (t => graft.sim.Similarity.annIvf(t, checkpoint = false)),
+      "ann_range_ivf" -> (t => graft.sim.Similarity.annRangeIvf(t, checkpoint = false)),
       "contamination" -> (t => graft.pipeline.CorpusOps.contaminationUncached(t)))
+
+  /** Query `name` for plan inspection: its [[inner]] form when it has
+    * one, else the SparkEntry query itself. Shared with FinalPlan. */
+  def query(spark: SparkSession, dir: String, name: String): org.apache.spark.sql.DataFrame =
+    inner.get(name) match {
+      case Some(fn) => fn(graft.io.Tables(spark, dir))
+      case None => graft.SparkEntry.queries(name)(spark, dir)
+    }
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 4,
       "usage: PlanDump <sfDir> <outDir> <suffix> <query...>")
@@ -41,21 +56,11 @@ object PlanDump {
     val names = args.drop(3).toSeq
     val unknown = names.filterNot(graft.SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = DriverSession.build(DriverSession.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
-      val df = inner.get(name) match {
-        case Some(fn) => fn(graft.io.Tables(spark, sfDir))
-        case None => graft.SparkEntry.queries(name)(spark, sfDir)
-      }
-      val txt = df.queryExecution.explainString(
+      val txt = query(spark, sfDir, name).queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       java.nio.file.Files.write(
         java.nio.file.Paths.get(outDir, s"$name$suffix.txt"),

@@ -1,171 +1,32 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-
-import graft.io.Tables
-
-/** Scratch profiler: times sub-stages of the heavy pipelines. */
+/** Spark-stage-level timing of named SparkEntry queries:
+  *
+  *   Profile <dir> stages <query...>     ("all" = every query)
+  *
+  * Runs the queries through [[Sweep]] with the noop sink and prints
+  * every completed stage's task count + wall + summed task CPU — the
+  * tool that found the single-task AQE-coalesced shortlist stage
+  * (SCALING.md §10x defect 3): a stage with tasks=1 and wall ≈ query
+  * total is a byte-based sizing pathology.
+  */
 object Profile {
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries",
-        graft.tools.DriverSession.CodegenCacheEntries)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val t = Tables(spark, sfDir)
-    import spark.implicits._
-
-    def time(name: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val n = f
-      println(f"PROFILE $name%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s  rows=$n")
-    }
-
-    // warmup
-    spark.range(1000000).selectExpr("sum(id)").collect()
-
-    if (args.length > 1 && args(1) == "ann") { annProfile(spark, t); spark.stop(); return }
-    if (args.length > 1 && args(1) == "ann2") { annProfile2(spark, t); spark.stop(); return }
-    if (args.length > 1 && args(1) == "stages") {
-      annProfile2(spark, t, args.drop(2).toSeq); spark.stop(); return
-    }
-    if (args.length > 1 && args(1) == "semantic") {
-      semanticProfile(spark, t); spark.stop(); return
-    }
-
-    val shingles = t.documents
-      .select($"doc_id", explode(expr(
-        "transform(sequence(1, greatest(length(text)-4, 1)), i -> substring(text, i, 5))"
-      )).as("shingle"))
-    time("shingles-explode")(shingles.count())
-    time("shingles-distinct")(shingles.distinct().count())
-    val hashed = shingles.distinct().select($"doc_id",
-      graft.dedup.Dedup.h32($"shingle").as("h"))
-    time("shingles-md5")(hashed.count())
-    val aggs = graft.dedup.Dedup.AB.zipWithIndex.map { case ((a, b), i) =>
-      min((col("h") * a + b) % graft.dedup.Dedup.P).as(s"m$i") }
-    val sig = hashed.groupBy($"doc_id").agg(aggs.head, aggs.tail: _*)
-    time("signatures")(sig.count())
-    time("minhash-full")(graft.dedup.Dedup.minhashLsh(t).count())
-
-
-    val grams = t.documents
-      .repartition(t.spark.sparkContext.defaultParallelism)
-      .select($"doc_id", explode(expr(graft.dedup.Dedup.gramExpr(5))).as("gram"))
-      .distinct()
-    time("grams-distinct")(grams.count())
-    val ga = grams.toDF("doc_a", "gram")
-    val gb = grams.toDF("doc_b", "gram")
-    time("gram-selfjoin")(ga.join(gb, ga("gram") === gb("gram") && ga("doc_a") < gb("doc_b")).count())
-    // prefix-filter pipeline sub-stages (mirrors Dedup.ngramJaccard)
-    val gramsP = grams.persist()
-    time("ngram-grams-persist")(gramsP.count())
-    val dfTab = gramsP.groupBy($"gram").agg(count(lit(1)).as("df"))
-    time("ngram-df-agg")(dfTab.count())
-    val prefix = gramsP.join(dfTab, "gram")
-      .groupBy($"doc_id")
-      .agg(collect_list(struct($"df", $"gram")).as("lst"))
-      .select($"doc_id", explode(expr(
-        "slice(array_sort(lst), 1, size(lst) - (size(lst) + 9) div 10 + 1)"
-      )).as("e"))
-      .select($"doc_id", $"e.gram".as("gram"))
-    time("ngram-prefix")(prefix.count())
-    time("ngram-prefix-selfjoin")(prefix.toDF("doc_a", "gram")
-      .join(prefix.toDF("doc_b", "gram"), "gram")
-      .filter($"doc_a" < $"doc_b").select($"doc_a", $"doc_b").distinct().count())
-    gramsP.unpersist()
-    time("ngram-full")(graft.dedup.Dedup.ngramJaccard(t).count())
-    time("simhash-hamming-full")(graft.dedup.Dedup.simhashHamming(t).count())
-    time("ann-lsh-full")(graft.sim.Similarity.annLsh(t).count())
-
-    val e = t.embeddings.select($"vec_id", $"label", $"embedding".cast("array<double>").as("v"))
-    time("emb-norm")(e.withColumn("nrm",
-      sqrt(aggregate(zip_with($"v", $"v", (x, y) => x * y), lit(0.0), (a, x) => a + x))).count())
-    time("emb-neardup-full")(graft.sim.Similarity.embeddingNearDup(t).count())
-    time("ann-brute-force")(graft.sim.Similarity.annBruteForce(t).count())
-    time("ann-pq")(graft.sim.Similarity.annPq(t).count())
-
-    // PassJoin edit-distance sub-stages — the SAME private[graft]
-    // builders Dedup.editDistance runs, so the timings always profile
-    // the shipped pipeline (a pasted copy would silently diverge when
-    // the constants change)
-    val keysE = graft.dedup.Dedup.edKeys(t.widen(t.documents)).persist()
-    time("edq-keys")(keysE.count())
-    val longKeys = keysE.filter($"l" >= graft.dedup.Dedup.EdBlockMinLen)
-    val blocksE = graft.dedup.Dedup.edBlocks(longKeys)
-    time("edq-blocks")(blocksE.count())
-    val probesE = graft.dedup.Dedup.edProbes(longKeys)
-    time("edq-probes")(probesE.count())
-    val candE = blocksE.toDF("doc_a", "ha1", "ha2", "bl", "bj", "bc")
-      .join(probesE.toDF("doc_b", "hb1", "hb2", "bl", "bj", "bc"),
-        Seq("bl", "bj", "bc"))
-      .filter($"doc_a" =!= $"doc_b")
-      .filter(graft.dedup.Dedup.edHistL1(spark, $"ha1", $"ha2",
-        $"hb1", $"hb2") <= lit(2 * graft.dedup.Dedup.EdMaxDist))
-      .select(least($"doc_a", $"doc_b").as("doc_a"),
-        greatest($"doc_a", $"doc_b").as("doc_b"))
-    time("edq-cand-join")(candE.count())
-    time("edq-cand-distinct")(candE.distinct().count())
-    keysE.unpersist()
-    time("edq-full")(graft.dedup.Dedup.editDistance(t).count())
-    spark.stop()
-  }
-
-  /** Semantic-family stage split (Profile <dir> semantic) — the r19
-    * verdict item 7 instrument: the suite's top two walls were
-    * dedup_semantic (4.25 s) and stream_semantic (4.05 s), and the
-    * split below shows where the build goes (τ calibration vs IVF
-    * pair join vs connected components vs assembly) and that the r20
-    * semanticCache makes the SECOND consumer a cache read instead of
-    * a full re-fit (the counter pin lives in SweepCachesSpec).
-    */
-  private def semanticProfile(spark: SparkSession, t: Tables): Unit = {
-    import graft.sim.Similarity
-    def time[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"PROFILE $name%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      r
-    }
-    Similarity.clearCaches() // cold family: pay exactly what a sweep's first consumer pays
-    val tau = time("tau-calibration")(Similarity.semanticTauCalibrated(t))
-    println(s"  tau=$tau (includes norm-projection build: cold cache)")
-    val pairs = time("ivf-pair-join") {
-      val p = Similarity.embeddingNearDupIvf(t, minCos = tau); p.count(); p
-    }
-    time("connected-components") {
-      // the returned pair table is localCheckpoint'd, so this times CC
-      // alone, not a pair re-join
-      graft.dedup.Dedup.connectedComponents(
-        pairs.select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))).count()
-    }
-    time("dedup_semantic-full-build")(Similarity.semanticDedup(t).count())
-    time("dedup_semantic-cached-read")(Similarity.semanticDedup(t).count())
-    val before = Similarity.semanticBuilds.get()
-    time("semantic-index-for-stream") {
-      val (idx, _) = Similarity.semanticIndex(t); idx.count()
-    }
-    println(s"  semanticBuilds during index build: " +
-      s"${Similarity.semanticBuilds.get() - before} (0 = reused cluster map)")
-  }
-
-  /** Spark-stage-level timing of named SparkEntry queries
-    * (Profile <dir> stages <query...>; "ann2" = the two Hamming-family
-    * queries that motivated it). Prints every completed stage's task
-    * count + wall + summed task CPU — the tool that found the
-    * single-task AQE-coalesced shortlist stage (SCALING.md §10x
-    * defect 3): a stage with tasks=1 and wall ≈ query total is a
-    * byte-based sizing pathology. */
-  private def annProfile2(spark: SparkSession, t: Tables,
-      queries: Seq[String] = Seq("ann_hamming", "ann_cascade")): Unit = {
+    require(args.length >= 3 && args(1) == "stages",
+      "usage: Profile <dir> stages <query...>")
+    val dir = args(0)
+    val names = args.drop(2).toSeq
+    val named =
+      if (names == Seq("all")) graft.SparkEntry.queries.toSeq
+      else names.map(n => n -> graft.SparkEntry.queries.getOrElse(n,
+        sys.error(s"unknown query $n")))
+    val spark = DriverSession.build(DriverSession.cpus)
+    // labelled when the query STARTS building: memo families run jobs
+    // while the DataFrame is constructed, before the sink sees it
     @volatile var label = ""
+    val queries: Seq[(String, Sweep.Query)] = named.map { case (n, fn) =>
+      n -> ((s, d) => { label = n; fn(s, d) })
+    }
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onStageCompleted(
           sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
@@ -176,7 +37,7 @@ object Profile {
         // operator the stage belongs to (the short name is almost
         // always an AQE future with zero signal)
         val frame = si.details.linesIterator
-          .find(l => l.contains("graft.") && !l.contains("Profile"))
+          .find(l => l.contains("graft.") && !l.contains("graft.tools."))
           .map(_.trim.stripPrefix("at ").take(80)).getOrElse("")
         val tm = si.taskMetrics
         val gc = tm.jvmGCTime / 1e3
@@ -186,59 +47,10 @@ object Profile {
         println(f"STAGE [$label] id=${si.stageId} tasks=${si.numTasks} wall=$wall%7.2f s cpu=$cpu%8.2f s gc=$gc%6.2f fetch=$fetch%6.2f deser=$deser%6.2f outRec=$outRows%-9d ${si.name.takeWhile(_ != '\n').take(40)}  $frame")
       }
     })
-    def time(name: String)(f: => Long): Unit = {
-      label = name
-      val t0 = System.nanoTime()
-      val n = f
-      println(f"PROFILE $name%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s  rows=$n")
+    Sweep.run(spark, dir, queries)(Sweep.noop).foreach { r =>
+      if (r.ok) println(f"PROFILE ${r.name}%-28s ${r.seconds}%8.2f s")
+      else println(s"FAILED ${r.name}: ${r.error.get.take(120)}")
     }
-    val names =
-      if (queries == Seq("all")) graft.SparkEntry.queries.keys.toSeq
-      else queries
-    names.foreach { name =>
-      val fn = graft.SparkEntry.queries.getOrElse(name,
-        sys.error(s"unknown query $name"))
-      time(name)(try fn(spark, t.dir).count() catch { case e: Throwable =>
-        println(s"FAILED $name: ${e.getMessage.take(120)}"); -1L })
-    }
-  }
-
-  /** ANN stage-1 breakdown (Profile <dir> ann) — the measurement
-    * behind Similarity.signWords' exchange boundary (r16): the giant
-    * signWord CASE-chain planned inside the probe×cand join stage
-    * makes row production interpreted (ham-shortlist-inline), while
-    * a materialization boundary before the join restores it
-    * (ham-shortlist-repart-words); 67 s vs 2.5 s at 10x. */
-  private def annProfile(spark: SparkSession, t: Tables): Unit = {
-    import spark.implicits._
-    import graft.sim.Similarity
-    def time(name: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val n = f
-      println(f"PROFILE $name%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s  rows=$n")
-    }
-    val words = t.widen(t.embeddings)
-      .select($"vec_id",
-        (0 until 64).map(i => when($"embedding" (i) > 0, lit(1L << i)).otherwise(lit(0L)))
-          .reduce((a, b) => a.bitwiseOR(b)).as("w"))
-    time("ham-words")(words.count())
-    val wHam = org.apache.spark.sql.expressions.Window
-      .partitionBy($"probe_id").orderBy($"ham".asc, $"cand_id".asc)
-    def shortlist(w: org.apache.spark.sql.DataFrame): Long = {
-      val probes = w.filter($"vec_id" % 13 === 0)
-        .select($"vec_id".as("probe_id"), $"w".as("wp"))
-      val cands = w.select($"vec_id".as("cand_id"), $"w".as("wc"))
-      probes.join(cands, $"probe_id" =!= $"cand_id")
-        .withColumn("ham", bit_count($"wp".bitwiseXOR($"wc")))
-        .withColumn("hr", row_number().over(wHam))
-        .filter($"hr" <= 128).count()
-    }
-    time("ham-shortlist-inline")(shortlist(words))
-    time("ham-shortlist-repart-words")(shortlist(
-      words.repartition(spark.sparkContext.defaultParallelism, $"vec_id")))
-    time("ann-hamming-full")(Similarity.annHamming(t).count())
-    time("ann-brute-force-full")(Similarity.annBruteForce(t).count())
-    time("ann-mrl-full")(Similarity.annMrl(t).count())
-    time("ann-cascade-full")(Similarity.annCascade(t).count())
+    spark.stop()
   }
 }

@@ -50,13 +50,7 @@ object ScaleGen {
     val nearDup = rest.contains("neardup")
     val clustered = rest.contains("clustered")
     val only = rest.filterNot(f => f == "neardup" || f == "clustered").toSet
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DriverSession.build(DriverSession.cpus)
     generate(spark, out, mult, only = only, nearDup = nearDup,
       clustered = clustered)
     spark.stop()

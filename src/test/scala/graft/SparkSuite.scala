@@ -3,19 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session per JVM (getOrCreate), configured like
-  * Verify/Bench: UTC, small shuffle partitions, nanos-as-long for the
-  * events table.
+/** One shared local session per JVM (getOrCreate), built by the same
+  * recipe as every main (tools.DriverSession) at 4 cores: UTC, small
+  * shuffle partitions, nanos-as-long for the events table.
   */
 trait SparkSuite extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.tools.DriverSession.build("4")
 
   def withLogLevel[A](f: => A): A = { spark.sparkContext.setLogLevel("WARN"); f }
 

@@ -1,6 +1,8 @@
 package graft
 
-import graft.tools.SweepCaches
+import graft.dedup.Dedup
+import graft.io.Tables
+import graft.tools.{Sweep, SweepCaches}
 
 /** Pins the hand-maintained SweepCaches consumer sets against the real
   * sweep: the sets must name actual SparkEntry.queries entries, and —
@@ -11,6 +13,9 @@ import graft.tools.SweepCaches
   * residency leak SweepCaches fixes). Verified with the families'
   * cacheBuilds/quantizerFits counters over a full sf0.001 sweep in
   * SparkEntry.queries order — the same order Verify and Bench use.
+  * Also pins that the shared tools.Sweep never hides a failure: a query
+  * that throws is a failed record carrying its message, it adds nothing
+  * to the seconds Bench sums, and its memo family is still released.
   */
 class SweepCachesSpec extends SparkSuite {
   private val dataDir = "/root/testdata/sf0.001"
@@ -27,47 +32,6 @@ class SweepCachesSpec extends SparkSuite {
     assert(unknownGram.isEmpty, s"gramConsumers not in queries: $unknownGram")
     assert(unknownCorpus.isEmpty, s"corpusConsumers not in queries: $unknownCorpus")
     assert(unknownContam.isEmpty, s"contamConsumers not in queries: $unknownContam")
-  }
-
-  test("benchdiff CACHE_FAMILIES mirror the SweepCaches consumer sets") {
-    // tools/benchdiff.py attributes a slow first family member to the
-    // family's one-time cache build; its member lists are a hand-kept
-    // mirror of the consumer sets here. If the two drift, benchdiff's
-    // first-payer note silently points at the wrong query (or none),
-    // so parse the Python literal and pin set equality.
-    val src = {
-      val s = scala.io.Source.fromFile("tools/benchdiff.py", "UTF-8")
-      try s.mkString finally s.close()
-    }
-    val start = src.indexOf("CACHE_FAMILIES = {")
-    assert(start >= 0, "CACHE_FAMILIES literal not found in tools/benchdiff.py")
-    val end = src.indexOf("\n    }", start)
-    assert(end > start, "CACHE_FAMILIES literal not closed as expected")
-    val block = src.substring(start, end)
-    val famRe = """"([^"]+)":\s*\[([^\]]*)\]""".r
-    val nameRe = """"([A-Za-z0-9_]+)"""".r
-    val fams: Map[String, Set[String]] = famRe.findAllMatchIn(block).map { m =>
-      m.group(1) -> nameRe.findAllMatchIn(m.group(2)).map(_.group(1)).toSet
-    }.toMap
-    assert(fams.size == 5, s"expected 5 cache families in benchdiff, got ${fams.keySet}")
-    def fam(prefix: String): Set[String] =
-      fams.collectFirst { case (k, v) if k.startsWith(prefix) => v }
-        .getOrElse(fail(s"no benchdiff family labeled '$prefix ...'"))
-    assert(fam("sim") == SweepCaches.simConsumers,
-      s"sim family drifted: benchdiff-only=${fam("sim").diff(SweepCaches.simConsumers)}, " +
-        s"sweepcaches-only=${SweepCaches.simConsumers.diff(fam("sim"))}")
-    assert(fam("dedup") == SweepCaches.dedupConsumers,
-      s"dedup family drifted: benchdiff-only=${fam("dedup").diff(SweepCaches.dedupConsumers)}, " +
-        s"sweepcaches-only=${SweepCaches.dedupConsumers.diff(fam("dedup"))}")
-    assert(fam("gram") == SweepCaches.gramConsumers,
-      s"gram family drifted: benchdiff-only=${fam("gram").diff(SweepCaches.gramConsumers)}, " +
-        s"sweepcaches-only=${SweepCaches.gramConsumers.diff(fam("gram"))}")
-    assert(fam("corpus") == SweepCaches.corpusConsumers,
-      s"corpus family drifted: benchdiff-only=${fam("corpus").diff(SweepCaches.corpusConsumers)}, " +
-        s"sweepcaches-only=${SweepCaches.corpusConsumers.diff(fam("corpus"))}")
-    assert(fam("contam") == SweepCaches.contamConsumers,
-      s"contam family drifted: benchdiff-only=${fam("contam").diff(SweepCaches.contamConsumers)}, " +
-        s"sweepcaches-only=${SweepCaches.contamConsumers.diff(fam("contam"))}")
   }
 
   test("full sweep: no family cache repopulates after its consumer set drains") {
@@ -133,6 +97,33 @@ class SweepCachesSpec extends SparkSuite {
     // instead of two identical gram-explode + df-agg pipelines.
     assert(graft.dedup.Dedup.gramBuilds.get() - grmBefore == 1,
       "gram postings must build exactly once per full sweep")
+    SweepCaches.releaseAll()
+  }
+
+  test("a throwing query is a failed record, not a fast one, and still drains its family") {
+    spark.sparkContext.setLogLevel("WARN")
+    // the gram family's two consumers; the second one throws
+    val queries: Seq[(String, Sweep.Query)] = Seq(
+      "dedup_ngram_jaccard" -> SparkEntry.queries("dedup_ngram_jaccard"),
+      "dedup_containment" -> ((_, _) => throw new IllegalStateException("planted failure")))
+    val records = Sweep.run(spark, dataDir, queries)(Sweep.noop)
+    assert(records.map(_.name) == queries.map(_._1))
+    val Seq(real, failed) = records
+    assert(real.ok, s"real query failed: ${real.error}")
+    assert(!failed.ok && failed.error.contains("planted failure"))
+
+    assert(Bench.okSeconds(records) == real.seconds)
+    // best-of-N: failing in any run keeps the query failed
+    val best = Bench.bestOf(Seq(records, records.map(_.copy(error = None))))
+    assert(best.map(_.ok) == Seq(true, false))
+    assert(Bench.okSeconds(best) == real.seconds)
+
+    // Tracker.done ran for the failed consumer: the gram family drained,
+    // its memo was released, so the next reader builds it again
+    val before = Dedup.gramBuilds.get()
+    Dedup.gramPostings(Tables(spark, dataDir))
+    assert(Dedup.gramBuilds.get() == before + 1,
+      "gram memo survived the sweep: Tracker.done skipped the failed query")
     SweepCaches.releaseAll()
   }
 }
