@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.io.Tables
+import graft.io.{Memo, Tables}
 
 /** Deduplication operators for the training-data pipeline surface
   * (BASELINE.json north_star; not present in the reference, which has no
@@ -191,24 +191,18 @@ object Dedup {
     hashed.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
   }
 
-  // One persisted signature table per (session, dir): three sweep
-  // queries consume it (dedup_minhash_lsh builds its memoized pair
-  // table from it, dedup_incremental_near and stream_near_dup probe
-  // with it) — K longs per doc, tiny relative to the corpus. Same
-  // immutable-dir assumption as lshCache; released by clearCaches()
-  // via tools.SweepCaches when the family's last consumer finishes.
-  private val sigCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), DataFrame]
+  // One persisted signature table per input: three sweep queries
+  // consume it (dedup_minhash_lsh builds its memoized pair table from
+  // it, dedup_incremental_near and stream_near_dup probe with it) — K
+  // longs per doc, tiny relative to the corpus.
+  private val sigMemo = Memo[DataFrame]("dedup")
 
-  /** Family-cache population counter (sigCache + lshCache entries
-    * built), for the SweepCaches no-repopulate-after-drain pin. */
-  private[graft] val cacheBuilds = new java.util.concurrent.atomic.AtomicInteger(0)
+  /** Builds of every Dedup memo, both families (perfbench's
+    * `memo.builds`). */
+  private[graft] object cacheBuilds { def get: Int = Memo.builds("dedup", "gram") }
 
   private[graft] def signatureTable(t: Tables): DataFrame =
-    sigCache.getOrElseUpdate((t.spark, t.dir), {
-      cacheBuilds.incrementAndGet()
-      signatures(t).persist()
-    })
+    sigMemo(t)(signatures(t).persist())
 
   /** Bind a caller-supplied signature table to the canonical
     * (doc_id, m0..m{K-1}) layout BY NAME. The probe paths
@@ -272,48 +266,14 @@ object Dedup {
     * generation, then signature agreement count as the similarity
     * estimate. est_sim = matches/16 is exact in binary (16 = 2^4).
     */
-  /** One materialized pair table per (session, dir): the same result
-    * serves the dedup_minhash_lsh query and clusters' edge input, so
-    * the expensive shingle→signature→band pipeline runs once per sweep.
-    * localCheckpoint (small, lineage-free) rather than persist. The key
-    * assumes input dirs are immutable for the session (the testdata
-    * contract); call clearCaches() after rewriting a dir in a
-    * long-lived session (e.g. the REPL).
+  /** One materialized pair table per input: the same result serves the
+    * dedup_minhash_lsh query and clusters' edge input, so the
+    * expensive shingle→signature→band pipeline runs once per sweep.
+    * localCheckpoint (small, lineage-free) rather than persist.
     */
-  private val lshCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), DataFrame]
+  private val lshMemo = Memo[DataFrame]("dedup")
 
-  /** Releases every Dedup memo (the dir-rewrite invalidation entry
-    * point). Callers invoke this only after a dir rewrite invalidates
-    * the cached results, so no live reference can legitimately outlast
-    * the call. Sweep bookkeeping that wants to evict one family early
-    * uses the narrower [[clearPairCaches]]/[[clearGramCache]]. */
-  def clearCaches(): Unit = {
-    clearPairCaches()
-    clearGramCache()
-  }
-
-  /** Narrow release for the MinHash signature/pair/cluster memos (the
-    * SweepCaches dedup family) — the gram-postings memo drains later
-    * in sweep order and has its own release. */
-  def clearPairCaches(): Unit = {
-    lshCache.values.foreach(_.unpersist())
-    lshCache.clear()
-    sigCache.values.foreach(_.unpersist())
-    sigCache.clear()
-    clusterCache.values.foreach(_.unpersist())
-    clusterCache.clear()
-    slack1Cache.clear()
-  }
-
-  /** Narrow release for the shared word-5-gram postings memo
-    * ([[gramPostings]]). */
-  def clearGramCache(): Unit = {
-    gramCache.values.foreach { case (g, a) => g.unpersist(); a.unpersist() }
-    gramCache.clear()
-  }
-
-  // One (postings, sorted-array) pair per (session, dir): ngramJaccard
+  // One (postings, sorted-array) pair per input: ngramJaccard
   // and containment built BYTE-IDENTICAL gram lineages independently —
   // the same widened scan → array_distinct(gramExpr(5)) explode with
   // the doc's gram-set size carried on every row → doc_id-keyed
@@ -321,15 +281,12 @@ object Dedup {
   // (df, gram) sort: both queries' prefixes are slices of ONE globally
   // ordered per-doc gram array, and their exact-|A∩B| verification
   // reads the same arrays, so the whole df+sort pipeline now lives in
-  // the memo instead of running once per query. Same immutable-dir
-  // contract and release discipline as lshCache.
-  private val gramCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), (DataFrame, DataFrame)]
-
-  /** gramCache population counter — SweepCachesSpec pins one build per
-    * full sweep (a second one = a consumer re-running the gram explode
-    * + df aggregation instead of reading the shared tables). */
-  private[graft] val gramBuilds = new java.util.concurrent.atomic.AtomicInteger(0)
+  // the memo instead of running once per query. Its own release
+  // family ("gram"): it drains at a different point in sweep order than
+  // the MinHash memos. SweepCachesSpec pins one build per full sweep (a
+  // second one = a consumer re-running the gram explode + df
+  // aggregation instead of reading the shared tables).
+  private[graft] val gramMemo = Memo[(DataFrame, DataFrame)]("gram")
 
   /** The shared (grams, arrTab) pair: grams = (doc_id, n, gram) with n
     * = |doc's distinct gram set| on every row, hash-partitioned by
@@ -344,8 +301,7 @@ object Dedup {
     * nor memoized. See [[ngramJaccard]]'s scaladoc for why the doc_id
     * exchange below the persist is load-bearing. */
   private[graft] def gramPostings(t: Tables): (DataFrame, DataFrame) =
-    gramCache.getOrElseUpdate((t.spark, t.dir), {
-      gramBuilds.incrementAndGet()
+    gramMemo(t) {
       val grams = t.widen(t.documents)
         .select(col("doc_id"), array_distinct(expr(gramExpr(5))).as("gs"))
         .select(col("doc_id"), size(col("gs")).as("n"),
@@ -369,7 +325,7 @@ object Dedup {
           expr("transform(array_sort(lst), x -> x.gram)").as("arr"))
         .persist()
       (grams, arrTab)
-    })
+    }
 
   /** @param probeOnly decade-instrument restriction (DedupProbeScan):
     *   predicate over `doc_id` limiting ONE side of the band-bucket
@@ -378,10 +334,7 @@ object Dedup {
     *   restricted pair table is not the shipped family's. */
   def minhashLsh(t: Tables, probeOnly: Option[Column] = None): DataFrame =
     probeOnly match {
-      case None => lshCache.getOrElseUpdate((t.spark, t.dir), {
-        cacheBuilds.incrementAndGet()
-        minhashLshUncached(t)
-      })
+      case None => lshMemo(t)(minhashLshUncached(t))
       case some => minhashLshUncached(t, some)
     }
 
@@ -401,7 +354,7 @@ object Dedup {
     // here). Signatures are K longs per doc: tiny relative to the
     // corpus, so materializing is the 100 TB-correct call too; the
     // persisted table is shared with the incremental/streaming probes
-    // via sigCache and released by clearCaches.
+    // via sigMemo.
     val sig = signatureTable(t)
     // One bucket table keyed by (band, key) → a single self-join covers
     // all bands (vs one join per band: fewer stages, one shuffle, and
@@ -562,32 +515,25 @@ object Dedup {
     * a third independent algorithm (DedupSpec cross-checks all on the
     * same pair graph).
     */
-  // One materialized cluster map per (session, dir): three sweep
+  // One materialized cluster map per input: three sweep
   // queries consume the SAME connected-components fixpoint
   // (dedup_clusters reads it, dedup_near_kept anti-joins its
   // non-representative ids, dedup_cluster_stats histograms it), and
   // an uncached call re-runs the whole O(log n)-round CC loop — the
-  // pair table was memoized (lshCache) but the loop above it ran 3x
+  // pair table was memoized (lshMemo) but the loop above it ran 3x
   // per sweep (~3 s each at sf0.1, r20). One narrow row per clustered
   // doc (doc_id, cluster_id): localCheckpoint-sized at any corpus the
-  // pair family itself can run on. Same immutable-dir contract +
-  // SweepCaches release as lshCache; same-round precedent is
-  // Similarity's semantic cluster-map memo.
-  private val clusterCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), DataFrame]
-
-  /** clusterCache population counter — SweepCachesSpec pins one CC
-    * run per full sweep (a second one = a consumer re-deriving the
-    * fixpoint instead of reading the shared map). */
-  private[graft] val clusterBuilds = new java.util.concurrent.atomic.AtomicInteger(0)
+  // pair family itself can run on. SweepCachesSpec pins one CC run
+  // per full sweep (a second one = a consumer re-deriving the fixpoint
+  // instead of reading the shared map).
+  private[graft] val clusterMemo = Memo[DataFrame]("dedup")
 
   def clusters(t: Tables): DataFrame =
-    clusterCache.getOrElseUpdate((t.spark, t.dir), {
-      clusterBuilds.incrementAndGet()
-      // minhashLsh is cached per (session, dir) — no second pipeline run
+    clusterMemo(t) {
+      // minhashLsh is memoized per input — no second pipeline run
       connectedComponents(minhashLsh(t).select(col("doc_a"), col("doc_b")))
         .localCheckpoint()
-    })
+    }
 
   /** Alternating large-star/small-star connected components over an
     * undirected pair list (doc_a, doc_b) → (doc_id, cluster_id =
@@ -1022,22 +968,20 @@ object Dedup {
   // is one narrow aggregation, but it re-ran on every query invocation
   // (3x under best-of-3 bench), charging a fixed ~0.3-0.5 s
   // measurement job to sub-second mm dedup queries — the r18
-  // dedup_image_ahash bench watch item. The same fingerprint lineage
-  // always yields the same volumes on an immutable dir (the standing
-  // memo contract), and memoizing is safe even across a REWRITTEN dir:
+  // dedup_image_ahash bench watch item. The key takes no
+  // Tables.fingerprint: memoizing is safe even across a REWRITTEN dir, since
   // both geometries are lossless key schemes, so a stale choice can
-  // only cost speed, never pairs. clearCaches() drops it.
-  private val slack1Cache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, Int, Int, Int), String]
+  // only cost speed, never pairs.
+  private val slack1Memo = Memo[String]("dedup")
 
   private[graft] def slack1KeyExpr(fp: DataFrame, nBlocks: Int,
       maxHam: Int): String =
-    slack1Cache.getOrElseUpdate((fp.sparkSession, nBlocks, maxHam,
-        fp.queryExecution.analyzed.semanticHash()), {
+    slack1Memo.keyed((fp.sparkSession, nBlocks, maxHam,
+        fp.queryExecution.analyzed.semanticHash())) {
       val (vSingle, vCombo) = slack1Volumes(fp, nBlocks, maxHam)
       if (vSingle <= vCombo) singleKeyExpr(nBlocks)
       else pairKeyExpr(unevenLayout(nBlocks * 8, maxHam + 2))
-    })
+    }
 
   // Literal array, NOT transform(sequence(...)): the HOF is
   // CodegenFallback, and this expr feeds the explode inside the

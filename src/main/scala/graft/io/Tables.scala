@@ -22,6 +22,27 @@ final case class Tables(spark: SparkSession, dir: String) {
   private def t(name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
+  /** Every file under `dir` as sorted (path, length, modificationTime):
+    * the input half of a [[Memo]] key. A dir whose files were rewritten
+    * lists differently, so its memos rebuild. Listed once per Tables
+    * through Hadoop's FileSystem, so any filesystem URI works.
+    *
+    * Walks with `listStatus`, not `listFiles`: `listFiles` wraps each
+    * status in a `LocatedFileStatus`, which copies the permissions, and
+    * the local filesystem without native Hadoop loads those by forking
+    * a `stat` process per file — ~100 ms per listing of the ten
+    * testdata tables on 4 cores, and slower the busier the host. */
+  lazy val fingerprint: Seq[(String, Long, Long)] = {
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def walk(p: org.apache.hadoop.fs.Path): Seq[(String, Long, Long)] =
+      fs.listStatus(p).toSeq.flatMap { f =>
+        if (f.isDirectory) walk(f.getPath)
+        else Seq((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+    walk(root).sorted
+  }
+
   /** Widen a narrow scan to the session's parallelism ONLY when the
     * source yielded fewer splits. The testdata tables are single small
     * parquet files = one input split, which would serialize every

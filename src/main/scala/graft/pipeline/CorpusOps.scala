@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.dedup.Dedup
-import graft.io.Tables
+import graft.io.{Memo, Tables}
 
 /** Corpus-curation operators a large-scale training-data pipeline runs
   * between dedup and training: repetition filtering, deterministic
@@ -145,46 +145,23 @@ object CorpusOps {
         $"col".as("line"))
   }
 
-  // One line-df table per (session, dir): corpus_boilerplate and
+  // One line-df table per input: corpus_boilerplate and
   // corpus_strip_boilerplate both join against it, and the
   // groupBy(line)+countDistinct shuffle is the expensive half of both
   // passes — the profile and the strip of the SAME corpus share one
-  // build the way the dedup family shares signatures. Same
-  // immutable-dir assumption as Dedup.sigCache; released by
-  // clearCaches() via tools.SweepCaches once the last consumer is done.
-  private val lineDfCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), DataFrame]
+  // build the way the dedup family shares signatures.
+  private val lineDfMemo = Memo[DataFrame]("corpus")
 
-  /** Family-cache population counter for the SweepCaches
-    * no-repopulate-after-drain pin. */
-  private[graft] val cacheBuilds = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** The general dir-rewrite invalidation entry point: drops EVERY
-    * CorpusOps memo (line-df AND the contamination table — r20 ADVICE:
-    * the documented "call clearCaches() after rewriting a dir" must
-    * not leave a stale contam table feeding contamination /
-    * corpus_curated / stream_curated). Sweep bookkeeping that wants to
-    * evict one family early uses the narrower
-    * [[clearLineDfCache]]/[[clearContamCache]]. */
-  def clearCaches(): Unit = {
-    clearLineDfCache()
-    clearContamCache()
-  }
-
-  /** Narrow release for the line-df memo only (SweepCaches' corpus
-    * family drains tens of queries before the contam consumers run). */
-  def clearLineDfCache(): Unit = {
-    lineDfCache.values.foreach(_.unpersist())
-    lineDfCache.clear()
-  }
+  /** Builds of every CorpusOps memo, both families (perfbench's
+    * `memo.builds`). */
+  private[graft] object cacheBuilds { def get: Int = Memo.builds("corpus", "contam") }
 
   /** Line document frequency — groupBy(line)+countDistinct(doc_id),
     * shared by profile and strip (the join-back side of the df rule),
-    * memoized and persisted per (session, dir).
+    * memoized and persisted per input.
     */
   private def lineDf(t: Tables): DataFrame =
-    lineDfCache.getOrElseUpdate((t.spark, t.dir), {
-      cacheBuilds.incrementAndGet()
+    lineDfMemo(t) {
       // distinct (doc, line) row-locally (array_distinct before the
       // explode) so the df agg is a plain count — countDistinct over
       // the raw line stream planned an Expand + a second aggregation
@@ -196,7 +173,7 @@ object CorpusOps {
         .groupBy(col("line"))
         .agg(count(lit(1)).as("line_df"))
         .persist()
-    })
+    }
 
   def boilerplate(t: Tables, minDf: Int = 2): DataFrame = {
     import t.spark.implicits._
@@ -450,36 +427,23 @@ object CorpusOps {
     * when it is not, so the plan survives 100× where a hint would
     * OOM the executors. Emits docs with at least one colliding gram.
     */
-  // One materialized contamination table per (session, dir): three
+  // One materialized contamination table per input: three
   // sweep queries consume it (the contamination audit itself, the
   // curated batch chain's decontamination anti-join, and the
   // stream_curated ingest gate's static side), and the build is a
   // full-corpus distinct-4-gram self-join — the most expensive thing
   // to recompute three times at 100 TB. The memo is the narrow
   // grouped output (doc_id, n_contam), localCheckpoint-sized.
-  // Released by its OWN SweepCaches consumer set
-  // ([[clearContamCache]]) — the corpus line-df family drains tens of
-  // queries earlier in name order, so sharing its release would
-  // either evict this memo before its consumers run or pin the
-  // line-df table long past its last reader.
-  private val contamCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), DataFrame]
-
-  /** contamCache population counter — SweepCachesSpec pins one build
-    * per full sweep (a second one = a consumer re-running the 4-gram
-    * join instead of reading the shared table). */
-  private[graft] val contamBuilds = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  def clearContamCache(): Unit = {
-    contamCache.values.foreach(_.unpersist())
-    contamCache.clear()
-  }
+  // Its OWN release family ("contam") — the corpus line-df family
+  // drains tens of queries earlier in name order, so sharing its
+  // release would either evict this memo before its consumers run or
+  // pin the line-df table long past its last reader. SweepCachesSpec
+  // pins one build per full sweep (a second one = a consumer
+  // re-running the 4-gram join instead of reading the shared table).
+  private[graft] val contamMemo = Memo[DataFrame]("contam")
 
   def contamination(t: Tables): DataFrame =
-    contamCache.getOrElseUpdate((t.spark, t.dir), {
-      contamBuilds.incrementAndGet()
-      contaminationUncached(t).localCheckpoint()
-    })
+    contamMemo(t)(contaminationUncached(t).localCheckpoint())
 
   /** The live plan behind the memo — the plan-audit surfaces
     * (tools.PlanDump, ScaleSpec's no-forced-broadcast pin) must inspect

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.io.Tables
+import graft.io.{Memo, Tables}
 
 /** Similarity search over the embeddings table (`Array[Float]`, 64-dim).
   *
@@ -29,73 +29,30 @@ object Similarity {
   private def dot(a: Column, b: Column): Column =
     graft.functions.GraftFunctions.graftDot(a, b)
 
-  // One persisted normalized projection per (session, dir): four
-  // operators read it, and re-persisting per call would stack duplicate
-  // cache entries across a full Verify/Bench sweep. Assumes input dirs
-  // are immutable for the session (the testdata contract); call
-  // clearCaches() after rewriting a dir in a long-lived session.
-  private val normCache =
-    scala.collection.concurrent.TrieMap.empty[(org.apache.spark.sql.SparkSession, String), DataFrame]
+  // One persisted normalized projection per input: four operators
+  // read it, and re-persisting per call would stack duplicate cache
+  // entries across a full Verify/Bench sweep.
+  private val normMemo = Memo[DataFrame]("sim")
 
-  def clearCaches(): Unit = {
-    normCache.values.foreach(_.unpersist())
-    normCache.clear()
-    quantCache.clear()
-    sizeCache.clear()
-    labelCache.clear()
-    tauCache.clear()
-    pqCache.clear()
-    ivfPqCache.clear()
-    semanticCache.values.foreach(_.unpersist())
-    semanticCache.clear()
-  }
+  /** Builds of every sim-family memo (perfbench's `memo.builds`). */
+  private[graft] object cacheBuilds { def get: Int = Memo.builds("sim") }
 
-  /** Dir-scoped eviction: drop only the cache entries for `dir`.
-    * Tests that build a throwaway table in a temp dir use this so
-    * they don't also evict the shared testdata entries other suites
-    * in the same JVM reuse (a cost-only perturbation — recompute —
-    * but it also invalidates cacheBuilds-counter pins like
-    * SweepCachesSpec's).
-    */
-  def clearCaches(dir: String): Unit = {
-    normCache.filterInPlace { case ((_, d), df) =>
-      val keep = d != dir
-      if (!keep) df.unpersist()
-      keep
-    }
-    quantCache.filterInPlace { case ((_, d, _), _) => d != dir }
-    sizeCache.filterInPlace { case ((_, d), _) => d != dir }
-    labelCache.filterInPlace { case ((_, d), _) => d != dir }
-    tauCache.filterInPlace { case ((_, d), _) => d != dir }
-    pqCache.filterInPlace { case ((_, d, _, _), _) => d != dir }
-    ivfPqCache.filterInPlace { case ((_, d, _, _, _), _) => d != dir }
-    semanticCache.filterInPlace { case ((_, d, _), df) =>
-      val keep = d != dir
-      if (!keep) df.unpersist()
-      keep
-    }
-  }
-
-  // Corpus row count per (session, dir): one count() on the persisted
+  // Corpus row count per input: one count() on the persisted
   // normalized projection, memoized — the IVF family derives its
   // default nlist from it (a 100 TB store knows its cardinality from
   // table metadata; this is the local stand-in).
-  private val sizeCache =
-    scala.collection.concurrent.TrieMap.empty[(org.apache.spark.sql.SparkSession, String), Long]
+  private[graft] val sizeMemo = Memo[Long]("sim")
 
-  def corpusSize(t: Tables): Long =
-    sizeCache.getOrElseUpdate((t.spark, t.dir), withNorm(t).count())
+  def corpusSize(t: Tables): Long = sizeMemo(t)(withNorm(t).count())
 
-  // Distinct label count per (session, dir): one pass over the
-  // persisted normalized projection, memoized like sizeCache — the
+  // Distinct label count per input: one pass over the persisted
+  // normalized projection, memoized like sizeMemo — the
   // filtered-search salt derivation reads it (a 100 TB store knows its
   // partition-key cardinality from table metadata).
-  private val labelCache =
-    scala.collection.concurrent.TrieMap.empty[(org.apache.spark.sql.SparkSession, String), Long]
+  private val labelMemo = Memo[Long]("sim")
 
   def labelCount(t: Tables): Long =
-    labelCache.getOrElseUpdate((t.spark, t.dir),
-      withNorm(t).select("label").distinct().count())
+    labelMemo(t)(withNorm(t).select("label").distinct().count())
 
   /** Default candidate-side salt count for [[annLabelFiltered]]'s
     * salted co-partitioned scoring join — the last scale knob to move
@@ -377,9 +334,8 @@ object Similarity {
     * order, ~130k dots: trivial and bit-deterministic). */
   private[graft] val TauSampleSize: Long = 512
 
-  // Calibrated τ per (session, dir) — one bounded collect each.
-  private val tauCache =
-    scala.collection.concurrent.TrieMap.empty[(org.apache.spark.sql.SparkSession, String), Double]
+  // Calibrated τ per input — one bounded collect each.
+  private val tauMemo = Memo[Double]("sim")
 
   /** Data-derived SemDeDup threshold (r17, replacing the N-indexed
     * ladder as the operators' default): estimate the corpus's OWN
@@ -405,8 +361,7 @@ object Similarity {
     * and the ScaleSpec anchor.
     */
   def semanticTauCalibrated(t: Tables): Double =
-    tauCache.getOrElseUpdate((t.spark, t.dir),
-      semanticTauFromVectors(withNorm(t), corpusSize(t)))
+    tauMemo(t)(semanticTauFromVectors(withNorm(t), corpusSize(t)))
 
   /** The calibration itself, corpus-agnostic: `e` needs (vec_id, v,
     * nrm). Sample ~[[TauSampleSize]] vectors by hash, μ̂/σ̂ over all
@@ -509,14 +464,8 @@ object Similarity {
         f"cell-pruned scale path) or pass allowFullScan = true deliberately.")
   }
 
-  /** Family-cache population counter (normCache entries built; quant
-    * fits have their own [[quantizerFits]]), for the SweepCaches
-    * no-repopulate-after-drain pin. */
-  private[graft] val cacheBuilds = new java.util.concurrent.atomic.AtomicInteger(0)
-
   private def withNorm(t: Tables): DataFrame =
-    normCache.getOrElseUpdate((t.spark, t.dir), {
-      cacheBuilds.incrementAndGet()
+    normMemo(t) {
       graft.functions.GraftFunctions.register(t.spark)
       import t.spark.implicits._
       // widen: the testdata table is one parquet file = one input
@@ -526,7 +475,7 @@ object Similarity {
       // vectors+norm are 65 doubles/row: the normalized projection any
       // 100 TB similarity pipeline materializes once
       e.withColumn("nrm", sqrt(dot($"v", $"v"))).persist()
-    })
+    }
 
   private val dotSql =
     "list_dot_product(CAST(%s AS DOUBLE[]), CAST(%s AS DOUBLE[]))"
@@ -559,22 +508,15 @@ object Similarity {
        |WHERE $d / ($na * $nb) >= 0.3""".stripMargin.replace("\n", " ")
   }
 
-  // One fitted coarse quantizer per (session, dir, nlist): annIvf and
+  // One fitted coarse quantizer per (input, nlist): annIvf and
   // embeddingNearDupIvf index the SAME corpus, so at 100 TB they would
   // share one coarse index — memoizing the fit is the scale-true
   // design, not just a local dedup of the sample count + 5 Lloyd
-  // passes. Same immutable-dir assumption as normCache. The model is
-  // centroids-only (nlist × 64 doubles): no persisted blocks to
-  // release, clearCaches() just drops the map entries.
-  private val quantCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, Int),
-      org.apache.spark.ml.clustering.KMeansModel]
-
-  /** Fit count, observable by tests: SimilaritySpec pins "one fit per
-    * (session, dir, nlist)" so the shared quantizer can't silently
-    * regress into per-operator refits.
-    */
-  private[graft] val quantizerFits = new java.util.concurrent.atomic.AtomicInteger(0)
+  // passes. The model is centroids-only (nlist × 64 doubles): no
+  // persisted blocks to release. SimilaritySpec pins one fit per
+  // (session, input, nlist) through its build count.
+  private[graft] val quantMemo =
+    Memo[org.apache.spark.ml.clustering.KMeansModel]("sim")
 
   /** Rows per centroid in the quantizer's fit budget: the fit set is
     * capped at FitRowsPerCentroid·nlist rows, so fit cost is O(nlist)
@@ -584,7 +526,7 @@ object Similarity {
 
   /** Coarse quantizer (KMeans, fixed seeds) fit on a bounded,
     * partitioning-independent subset — shared by [[annIvf]] and
-    * [[embeddingNearDupIvf]] via [[quantCache]]. Centroid quality
+    * [[embeddingNearDupIvf]] via [[quantMemo]]. Centroid quality
     * needs a representative subset, not the corpus: at 100 TB fitting
     * on the full data would be the pipeline's bottleneck. Random init
     * (not k-means||) drops the multi-pass init jobs; 5 Lloyd
@@ -608,12 +550,11 @@ object Similarity {
     * the uniform sample it replaces.
     */
   private def coarseQuantizer(t: Tables, nlist: Int) =
-    quantCache.getOrElseUpdate((t.spark, t.dir, nlist), {
+    quantMemo(t, nlist) {
       import org.apache.spark.ml.functions.array_to_vector
-      quantizerFits.incrementAndGet()
       val withVec = withNorm(t).withColumn("features", array_to_vector(col("v")))
       fitQuantizer(withVec, nlist)
-    })
+    }
 
   /** The cache-free fit (exposed for QuantizeSpec's partitioning-
     * independence pin): expects a frame carrying (vec_id, features). */
@@ -865,7 +806,7 @@ object Similarity {
     } else cells
   }
 
-  // One materialized semantic cluster map per (session, dir, τ) at the
+  // One materialized semantic cluster map per (input, τ) at the
   // DERIVED blocking knobs: dedup_semantic reads it directly and the
   // stream_semantic static index joins against it, and the IVF pair
   // generation + connected components behind it are the suite's two
@@ -873,15 +814,10 @@ object Similarity {
   // was this exact re-fit; r20 stage audit in SCALING.md). The map is
   // one narrow row per vector (vec_id, rep_id, kept, tau) —
   // localCheckpoint-sized at any corpus the pair family itself can
-  // run on. Same immutable-dir contract as normCache; released by
-  // clearCaches() via tools.SweepCaches when the sim family drains.
-  private val semanticCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, Double), DataFrame]
-
-  /** semanticCache population counter — SweepCachesSpec pins one build
-    * per full sweep (a second one = the stream twin re-fitting the
-    * pair join + CC instead of reusing the batch cluster map). */
-  private[graft] val semanticBuilds = new java.util.concurrent.atomic.AtomicInteger(0)
+  // run on. SweepCachesSpec pins one build per full sweep (a second
+  // one = the stream twin re-fitting the pair join + CC instead of
+  // reusing the batch cluster map).
+  private[graft] val semanticMemo = Memo[DataFrame]("sim")
 
   def semanticDedup(t: Tables, minCos: Double = 0.0,
       nlist: Int = 0, assign: Int = 0,
@@ -891,10 +827,9 @@ object Similarity {
     // knobs are instrument/spec territory — same contract as
     // minhashLsh's probeOnly bypass)
     if (nlist <= 0 && assign <= 0 && bandKnobs.isEmpty)
-      semanticCache.getOrElseUpdate((t.spark, t.dir, tau), {
-        semanticBuilds.incrementAndGet()
+      semanticMemo(t, tau) {
         semanticDedupUncached(t, tau, nlist, assign, bandKnobs).localCheckpoint()
-      })
+      }
     else semanticDedupUncached(t, tau, nlist, assign, bandKnobs)
   }
 
@@ -1995,13 +1930,10 @@ object Similarity {
 
   // ---- Product quantization (ann_pq) ----
 
-  // One codebook per (session, dir, m, ks): m subspace codebooks of
+  // One codebook per (input, m, ks): m subspace codebooks of
   // ks centroids each — a tiny driver-side model artifact
-  // (m·ks·(d/m) doubles = d·ks = 8 KB at the defaults), same
-  // immutable-dir contract as quantCache.
-  private val pqCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, Int, Int),
-      Array[Array[Array[Double]]]]
+  // (m·ks·(d/m) doubles = d·ks = 8 KB at the defaults).
+  private val pqMemo = Memo[Array[Array[Array[Double]]]]("sim")
 
   /** Deterministic driver-side Lloyd iterations: init = first ks
     * distinct points in fit-set (hash) order, assignment ties break to
@@ -2088,7 +2020,7 @@ object Similarity {
     * [[lloyd]] fits — one per d/m-dim subspace of the NORMALIZED
     * vectors. */
   private[graft] def fitPqCodebook(t: Tables, m: Int, ks: Int): Array[Array[Array[Double]]] =
-    pqCache.getOrElseUpdate((t.spark, t.dir, m, ks), {
+    pqMemo(t, m, ks) {
       val budget = PqFitRowsPerCentroid * ks
       val rows = withNorm(t)
         .filter(col("nrm") > 0)
@@ -2099,7 +2031,7 @@ object Similarity {
         .select(graft.functions.GraftFunctions.vdiv(col("v"), col("nrm")).as("u"))
         .collect().map(_.getAs[scala.collection.Seq[Double]]("u").toArray)
       fitSubspaces(rows, m, ks)
-    })
+    }
 
   /** Product-quantization ADC search (PQ8: m=8 subspaces × 8-bit
     * codes) — the compression successor to scalar int8 for 100 TB
@@ -2214,13 +2146,11 @@ object Similarity {
       .select(col("probe_id"), col("cand_id"), col("rnk"), col("cos"))
   }
 
-  // Residual PQ codebooks per (session, dir, m, ks, nlist): the
-  // IVFPQ fit depends on the coarse quantizer (codebooks are trained
-  // on cell RESIDUALS), so nlist joins the key. Same driver-sized
-  // artifact (d·ks doubles) and immutable-dir contract as pqCache.
-  private val ivfPqCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, Int, Int, Int),
-      Array[Array[Array[Double]]]]
+  // Residual PQ codebooks per (input, m, ks, nlist): the IVFPQ fit
+  // depends on the coarse quantizer (codebooks are trained on cell
+  // RESIDUALS), so nlist joins the key. Same driver-sized artifact
+  // (d·ks doubles) as pqMemo.
+  private val ivfPqMemo = Memo[Array[Array[Array[Double]]]]("sim")
 
   /** Residual PQ codebook fit for [[annIvfPq]]: the same hash-ordered
     * row-budget selection as [[fitPqCodebook]] (O(ks) cost at any
@@ -2235,7 +2165,7 @@ object Similarity {
     */
   private[graft] def fitIvfPqCodebook(t: Tables, m: Int, ks: Int,
       nlist: Int): Array[Array[Array[Double]]] =
-    ivfPqCache.getOrElseUpdate((t.spark, t.dir, m, ks, nlist), {
+    ivfPqMemo(t, m, ks, nlist) {
       val cents = coarseQuantizer(t, nlist).clusterCenters.map(_.toArray)
       val budget = PqFitRowsPerCentroid * ks
       val rows = withNorm(t)
@@ -2261,7 +2191,7 @@ object Similarity {
         r
       }
       fitSubspaces(residuals, m, ks)
-    })
+    }
 
   /** IVF cell pruning composed with residual product quantization —
     * the full FAISS-style IVFPQ index, the canonical 100 TB retrieval

@@ -1,34 +1,34 @@
 package graft.tools
 
-/** Family-cache bookkeeping for full-suite sweeps (Verify/Bench).
+import graft.io.Memo
+
+/** Memo-family bookkeeping for full-suite sweeps (Verify/Bench).
   *
-  * The sim, dedup, and corpus families memoize expensive
-  * intermediates per (session, dir) — Similarity.normCache (persisted
-  * normalized vectors + the fitted coarse quantizer), Dedup.lshCache
-  * (the localCheckpoint'd MinHash pair table), and
-  * CorpusOps.lineDfCache (the boilerplate line-df table). Within a
-  * family that reuse
+  * Similarity, Dedup and CorpusOps memoize expensive intermediates
+  * per input ([[graft.io.Memo]]) — the persisted normalized vectors
+  * and fitted quantizers, the localCheckpoint'd MinHash pair table,
+  * the boilerplate line-df table. Within a family that reuse
   * is the point, but an 89-query sweep that never releases them holds
   * every family's blocks concurrently for the rest of the run:
   * eviction pressure mid-sweep is the plausible mechanism behind the
   * r8 bench's single-query 6.8x `corpus_curated` outlier. A Tracker
-  * releases each family's cache the moment its LAST consumer
+  * releases each family's memos the moment its LAST consumer
   * finishes, so sweep residency is bounded by one family, not the
   * union of all of them.
   *
   * The consumer sets are the static call graph of SparkEntry.queries;
   * a query added to a family without updating its set here just means
-  * a refit/recompute (correctness unaffected — the caches rebuild on
-  * demand). Unpersisting the localCheckpoint'd LSH pair table is safe
-  * exactly because no later query references it once the set drains.
+  * a refit/recompute (correctness unaffected — memos rebuild on
+  * demand). Freeing the localCheckpoint'd tables is safe exactly
+  * because no later query references them once the set drains.
   */
 object SweepCaches {
 
-  /** Queries that read Similarity.normCache / quantCache.
+  /** Queries that read a Similarity memo (family "sim").
     * SweepCachesSpec pins this as a subset of SparkEntry.queries and
-    * (via the families' cacheBuilds counters) that no cache
-    * repopulates after its set drains in a full sweep — the failure
-    * mode of a renamed/added consumer missing from here. */
+    * (via the family's `Memo.builds`) that no memo rebuilds after its
+    * set drains in a full sweep — the failure mode of a renamed/added
+    * consumer missing from here. */
   private[graft] val simConsumers = Set(
     "dedup_embedding", "dedup_embedding_ivf",
     "ann_brute_force", "ann_label_filtered", "ann_range", "ann_range_ivf", "ann_mrl",
@@ -39,27 +39,27 @@ object SweepCaches {
     "ann_hamming", "ann_cascade", "dedup_semantic", "stream_semantic",
     "ann_recall_probe")
 
-  /** Queries that read Dedup.lshCache (the memoized pair table) or
-    * Dedup.sigCache (the shared signature table). Same pin as
+  /** Queries that read a Dedup MinHash memo (family "dedup": the
+    * signature table, pair table and cluster map). Same pin as
     * [[simConsumers]]. */
   private[graft] val dedupConsumers = Set(
     "dedup_minhash_lsh", "dedup_clusters", "dedup_near_kept",
     "dedup_cluster_stats",
     "corpus_split_leakage", "dedup_incremental_near", "stream_near_dup")
 
-  /** Queries that read Dedup.gramCache (the shared word-5-gram
+  /** Queries that read Dedup.gramMemo (the shared word-5-gram
     * postings + document-frequency tables). Its OWN family for the
-    * same reason as [[contamConsumers]]: the lshCache set drains at a
+    * same reason as [[contamConsumers]]: the MinHash set drains at a
     * different point in sweep order. Same pin as [[simConsumers]]. */
   private[graft] val gramConsumers = Set(
     "dedup_ngram_jaccard", "dedup_containment")
 
-  /** Queries that read CorpusOps.lineDfCache (the shared
+  /** Queries that read CorpusOps.lineDfMemo (the shared
     * boilerplate line-df table). Same pin as [[simConsumers]]. */
   private[graft] val corpusConsumers = Set(
     "corpus_boilerplate", "corpus_strip_boilerplate")
 
-  /** Queries that read CorpusOps.contamCache (the memoized
+  /** Queries that read CorpusOps.contamMemo (the memoized
     * benchmark-contamination id table — the full-corpus 4-gram join).
     * Its OWN family, not folded into [[corpusConsumers]]: the line-df
     * set drains tens of queries earlier in sweep order, and one
@@ -69,39 +69,26 @@ object SweepCaches {
   private[graft] val contamConsumers = Set(
     "contamination", "corpus_curated", "stream_curated")
 
-  final class Tracker {
-    private val sim = collection.mutable.Set.from(simConsumers)
-    private val ded = collection.mutable.Set.from(dedupConsumers)
-    private val grm = collection.mutable.Set.from(gramConsumers)
-    private val corp = collection.mutable.Set.from(corpusConsumers)
-    private val cont = collection.mutable.Set.from(contamConsumers)
+  /** The one family → consumer-set declaration that [[Tracker]] walks;
+    * its keys are [[Memo.Families]]. */
+  private[graft] val consumers: Map[String, Set[String]] = Map(
+    "sim" -> simConsumers, "dedup" -> dedupConsumers, "gram" -> gramConsumers,
+    "corpus" -> corpusConsumers, "contam" -> contamConsumers)
+  require(consumers.keySet == Memo.Families, "one consumer set per memo family")
 
-    /** True once the family's last consumer has finished (and its
-      * caches were released). */
-    def simDrained: Boolean = sim.isEmpty
-    def dedupDrained: Boolean = ded.isEmpty
-    def gramDrained: Boolean = grm.isEmpty
-    def corpusDrained: Boolean = corp.isEmpty
-    def contamDrained: Boolean = cont.isEmpty
+  final class Tracker {
+    private val pending = consumers.map { case (f, qs) => f -> collection.mutable.Set.from(qs) }
 
     /** Call after query `name` completes (success or failure — a
-      * failed consumer still never reads the cache again). Each family
-      * releases with its NARROW clear — the broad clearCaches() entry
-      * points would evict sibling families that drain later. */
-    def done(name: String): Unit = {
-      if (sim.remove(name) && sim.isEmpty) graft.sim.Similarity.clearCaches()
-      if (ded.remove(name) && ded.isEmpty) graft.dedup.Dedup.clearPairCaches()
-      if (grm.remove(name) && grm.isEmpty) graft.dedup.Dedup.clearGramCache()
-      if (corp.remove(name) && corp.isEmpty) graft.pipeline.CorpusOps.clearLineDfCache()
-      if (cont.remove(name) && cont.isEmpty) graft.pipeline.CorpusOps.clearContamCache()
-    }
+      * failed consumer still never reads the memo again). Releases
+      * only the families that just drained; the others drain later. */
+    def done(name: String): Unit =
+      pending.foreach { case (family, left) =>
+        if (left.remove(name) && left.isEmpty) Memo.release(family)
+      }
   }
 
   /** Drop everything — used between a warmup sweep and the timed
     * sweep so warmup-dir residue doesn't ride along. */
-  def releaseAll(): Unit = {
-    graft.sim.Similarity.clearCaches()
-    graft.dedup.Dedup.clearCaches()
-    graft.pipeline.CorpusOps.clearCaches()
-  }
+  def releaseAll(): Unit = Memo.releaseAll()
 }

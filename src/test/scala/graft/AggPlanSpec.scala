@@ -106,6 +106,6 @@ class AggPlanSpec extends SparkSuite {
       assert(plan.contains("ReadSchema: struct<doc_id:bigint,text:string>"),
         s"$name scan must be pruned to doc_id+text:\n${plan.take(2000)}")
     }
-    graft.pipeline.CorpusOps.clearCaches()
+    graft.io.Memo.release("corpus")
   }
 }

@@ -171,9 +171,6 @@ class QuantizeSpec extends SparkSuite {
     // the ADC ANN runs end-to-end over the adversarial table too
     val ann = Similarity.annInt8(ti).collect()
     assert(ann.nonEmpty && ann.forall(_.getAs[Int]("rnk") <= 5))
-    // temp dir: drop only ITS norm projection — a blanket clearCaches()
-    // would also evict the shared testdata entries other suites reuse
-    Similarity.clearCaches(ti.dir)
   }
 
   test("non-finite elements poison qmax to NaN (array_max agreement)") {
