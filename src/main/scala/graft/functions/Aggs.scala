@@ -17,25 +17,23 @@ object Aggs {
 
   /** Exact monetary/quantity sum: doubles quantized to 4 decimal places
     * (same HALF_UP quantization as a CAST to DECIMAL(18,4)) accumulated
-    * in scaled-long units — overflow-safe to ~9e14 units and mergeable
-    * associatively, then converted to double once at finish. Matches
-    * the engine-portable decimal-sum pattern bitwise.
+    * in scaled-long units — exact up to 2^63 units (~9.2e14) and
+    * mergeable associatively, then converted to double once at finish.
+    * Past 2^63 units it throws ArithmeticException rather than wrap.
+    * Matches the engine-portable decimal-sum pattern bitwise.
     */
   def decimalSumOf[T](f: T => Double): Aggregator[T, Long, Double] =
     new Aggregator[T, Long, Double] {
       override def zero: Long = 0L
       override def reduce(b: Long, a: T): Long =
-        b + JBigDecimal.valueOf(f(a)).setScale(4, RoundingMode.HALF_UP)
-          .unscaledValue().longValueExact()
-      override def merge(b1: Long, b2: Long): Long = b1 + b2
+        Math.addExact(b, JBigDecimal.valueOf(f(a)).setScale(4, RoundingMode.HALF_UP)
+          .unscaledValue().longValueExact())
+      override def merge(b1: Long, b2: Long): Long = Math.addExact(b1, b2)
       override def finish(units: Long): Double =
         new JBigDecimal(java.math.BigInteger.valueOf(units), 4).doubleValue()
       override def bufferEncoder: Encoder[Long] = Encoders.scalaLong
       override def outputEncoder: Encoder[Double] = Encoders.scalaDouble
     }
-
-  /** Plain Double form. */
-  val decimalSum: Aggregator[Double, Long, Double] = decimalSumOf[Double](identity)
 
   // public: the Catalyst-generated encoder code must reach this class
   final case class LiSlice(l_returnflag: String, l_linestatus: String,

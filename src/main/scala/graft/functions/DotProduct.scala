@@ -77,7 +77,8 @@ object GraftFunctions {
     "graft_top_cells" -> (e => TopCells(e(0), e(1), e(2))),
     "graft_quant" -> (e => QuantCodes(e(0), e(1))),
     "graft_vdiv" -> (e => VecDiv(e(0), e(1))),
-    "graft_word_grams" -> (e => WordGrams(e(0), e(1))))
+    "graft_word_grams" -> (e => WordGrams(e(0), e(1))),
+    "graft_dsum" -> GraftDsum.build)
 
   /** Registers every [[table]] function the session does not already
     * have, so the per-operator calls (every `Tables()` construction and
@@ -128,4 +129,16 @@ object GraftFunctions {
     * the interpreted `transform(v, x => x / s)` it replaces. */
   def vdiv(v: Column, s: Column): Column =
     org.apache.spark.sql.functions.call_function("graft_vdiv", v, s)
+
+  /** Column accessor for [[GraftDsum]] (requires register() first):
+    * `CAST(SUM(CAST(c AS DECIMAL(18,4))) AS DOUBLE)`, bit for bit. */
+  def dsum(c: Column): Column =
+    org.apache.spark.sql.functions.call_function("graft_dsum", c)
+
+  /** Column accessor for [[GraftDsum]]'s discounted form (requires
+    * register() first): the same exact sum of
+    * `CAST(CAST(price AS DECIMAL(18,4)) * (CAST(1 AS DECIMAL(18,4)) -
+    * CAST(discount AS DECIMAL(18,4))) AS DECIMAL(18,4))`. */
+  def dsumDisc(price: Column, discount: Column): Column =
+    org.apache.spark.sql.functions.call_function("graft_dsum", price, discount)
 }

@@ -2,8 +2,9 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType}
+import org.apache.spark.sql.types.IntegerType
 
+import graft.functions.GraftFunctions
 import graft.io.Tables
 
 /** Bloom-filter join pruning: the canonical 100 TB shuffle-volume
@@ -190,8 +191,7 @@ object BloomJoin {
     BloomJoin.semiJoin(t.lineitem, "l_orderkey", dim, "o_orderkey")
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n_items"),
-        sum(col("l_extendedprice").cast(DecimalType(18, 4)))
-          .cast(DoubleType).as("revenue"))
+        GraftFunctions.dsum(col("l_extendedprice")).as("revenue"))
   }
 
   val q47Sql: String =

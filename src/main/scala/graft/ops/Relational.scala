@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.GraftFunctions.{dsum, dsumDisc}
 import graft.io.Tables
 
 /** Relational operator surface.
@@ -19,33 +20,28 @@ import graft.io.Tables
   *
   * Determinism-for-oracle notes (these queries are hash-compared against
   * DuckDB by the driver):
-  *  - double SUMs are order-dependent, so monetary/quantity sums go
-  *    through exact DECIMAL(18,4) accumulation and are cast back to
-  *    double at the end (same expression on the DuckDB side);
+  *  - double SUMs are order-dependent, so monetary/quantity sums are
+  *    exact: the DuckDB side runs
+  *    `CAST(SUM(CAST(x AS DECIMAL(18,4))) AS DOUBLE)`, and this side runs
+  *    `dsum`/`dsumDisc` (`graft_dsum`, functions/DecimalSum.scala),
+  *    which returns that double bit for bit: every row becomes the
+  *    cast's own unscaled scale-4 long (a proven fast path, Spark's cast
+  *    for the rest) and the longs are added exactly with a carry, so the
+  *    sum is order-independent and the one rounding is the final
+  *    decimal→double cast;
   *  - ratios are single IEEE divisions of exactly-representable values
   *    (deterministic in any engine);
   *  - top-k / rank queries carry a total tiebreak order.
   */
 object Relational {
 
-  /** Exact decimal accumulation of a double column, surfaced as double.
-    * Data has ≤2 decimal places; scale 4 keeps the double→decimal cast
-    * unambiguous in both Spark and DuckDB.
-    */
-  private def dsum(c: Column): Column =
-    sum(c.cast(DecimalType(18, 4))).cast(DoubleType)
-
+  // dsum(c) and dsumDisc(price, discount) are graft_dsum (see above).
+  // dsumDisc's price and (1-discount) each carry 2 decimals, so their
+  // product has exactly 4: the scale-4 recast is lossless and the
+  // unscaled sum stays under 2^53, where decimal→double conversion is
+  // exact in every engine (DuckDB's is 1-ulp-off above that). The
+  // window sums cast through `dec`.
   private def dec(c: Column): Column = c.cast(DecimalType(18, 4))
-
-  /** Exact discounted-revenue sum: price and (1-discount) each carry 2
-    * decimals, so their product is exactly 4 — the scale-4 recast is
-    * lossless and keeps the unscaled sum under 2^53, where
-    * decimal→double conversion is exact in every engine (DuckDB's is
-    * 1-ulp-off above that).
-    */
-  private def dsumDisc(price: Column, discount: Column): Column =
-    sum((dec(price) * (lit(1).cast(DecimalType(18, 4)) - dec(discount)))
-      .cast(DecimalType(18, 4))).cast(DoubleType)
 
   private val dsumDiscSql =
     "CAST(SUM(CAST(CAST(%s AS DECIMAL(18,4)) * (CAST(1 AS DECIMAL(18,4)) - CAST(%s AS DECIMAL(18,4))) AS DECIMAL(18,4))) AS DOUBLE)"
@@ -958,19 +954,18 @@ object Relational {
       |SELECT p_partkey, 'p_size', CAST(p_size AS DOUBLE) FROM part""".stripMargin.replace("\n", " ")
 
   /** Explicit GROUPING SETS with grouping() indicator columns — the
-    * general form of q15's rollup / q22's cube. SQL-interface entry
-    * (the DataFrame API exposes only rollup/cube; grouping sets are a
-    * Catalyst Expand either way, one shuffle on the expanded keys).
+    * general form of q15's rollup / q22's cube, through
+    * `Dataset.groupingSets` (a Catalyst Expand, one shuffle on the
+    * expanded keys).
     */
   def q38GroupingSets(t: Tables): DataFrame = {
-    t.orders.createOrReplaceTempView("orders_gs")
-    t.spark.sql(
-      """SELECT o_orderstatus, o_orderpriority,
-        | CAST(grouping(o_orderstatus) AS INT) AS g_status,
-        | CAST(grouping(o_orderpriority) AS INT) AS g_prio,
-        | count(*) AS cnt
-        |FROM orders_gs
-        |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())""".stripMargin)
+    import t.spark.implicits._
+    t.orders
+      .groupingSets(Seq(Seq($"o_orderstatus"), Seq($"o_orderpriority"), Seq()),
+        $"o_orderstatus", $"o_orderpriority")
+      .agg(grouping($"o_orderstatus").cast(IntegerType).as("g_status"),
+        grouping($"o_orderpriority").cast(IntegerType).as("g_prio"),
+        count(lit(1)).as("cnt"))
   }
 
   val q38Sql: String =

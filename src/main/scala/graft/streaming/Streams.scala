@@ -27,12 +27,13 @@ object Streams {
     * DataFrame with (ts, event_type, value), batch or streaming.
     */
   def hourlyCounts(events: DataFrame): DataFrame = {
+    graft.functions.GraftFunctions.register(events.sparkSession)
     events
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(
         count(lit(1)).as("cnt"),
-        sum(col("value").cast(DecimalType(18, 4))).cast(DoubleType).as("sum_value"))
+        graft.functions.GraftFunctions.dsum(col("value")).as("sum_value"))
       .select(col("window.start").as("hour"), col("event_type"),
         col("cnt"), col("sum_value"))
   }
@@ -44,12 +45,13 @@ object Streams {
     * 3 windows per (grid slot, type) regardless of stream length.
     */
   def hoppingCounts(events: DataFrame): DataFrame = {
+    graft.functions.GraftFunctions.register(events.sparkSession)
     events
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "30 minutes", "10 minutes"), col("event_type"))
       .agg(
         count(lit(1)).as("cnt"),
-        sum(col("value").cast(DecimalType(18, 4))).cast(DoubleType).as("sum_value"))
+        graft.functions.GraftFunctions.dsum(col("value")).as("sum_value"))
       .select(col("window.start").as("win_start"), col("event_type"),
         col("cnt"), col("sum_value"))
   }

@@ -26,7 +26,9 @@ object ExtDemo {
       "array(array(1.0d, 0.0d), array(0.1d, 0.0d)), 1)", "[1]"),
     "graft_quant" -> ("graft_quant(array(1.0d, 2.0d), 2.0d).codes", "[64, 127]"),
     "graft_vdiv" -> ("graft_vdiv(array(2.0d, 4.0d), 2.0d)", "[1.0, 2.0]"),
-    "graft_word_grams" -> ("graft_word_grams('a b c', 2)", "[a b, b c]"))
+    "graft_word_grams" -> ("graft_word_grams('a b c', 2)", "[a b, b c]"),
+    // an aggregate: a scalar subquery over a two-row inline table
+    "graft_dsum" -> ("(SELECT graft_dsum(x) FROM VALUES (0.1d), (0.2d) AS t(x))", "0.3"))
 
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder()

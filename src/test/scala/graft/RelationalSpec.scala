@@ -401,4 +401,27 @@ class RelationalSpec extends SparkSuite {
       (d1ms, 0L) -> 2L,                                     // users 8+9
       (d1ms, 2L) -> 1L))                                    // user 9
   }
+
+  test("q1/q15/q22 executed plans aggregate without a DecimalType buffer") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.types.DecimalType
+    val plans = new AdaptiveSparkPlanHelper {}
+    Seq("q1" -> Relational.q1Agg _, "q15" -> Relational.q15Rollup _,
+        "q22" -> Relational.q22Cube _).foreach { case (name, q) =>
+      val df = q(t)
+      df.collect()
+      val aggs = plans.collect(df.queryExecution.executedPlan) { case a: BaseAggregateExec => a }
+      assert(aggs.nonEmpty, s"$name has no aggregate")
+      val decimalBuffers = aggs.flatMap(_.aggregateExpressions)
+        .flatMap(_.aggregateFunction.aggBufferAttributes)
+        .filter(_.dataType.isInstanceOf[DecimalType])
+      assert(decimalBuffers.isEmpty, s"$name: $decimalBuffers")
+    }
+  }
+
+  test("q38 leaves no temp view on the session") {
+    Relational.q38GroupingSets(t).collect()
+    assert(!spark.catalog.tableExists("orders_gs"))
+  }
 }

@@ -19,18 +19,18 @@ import graft.functions.{GraftExtensions, GraftFunctions}
   * functions. */
 class GraftFunctionsSpec extends graft.SparkSuite {
 
-  private val nine = Seq("graft_dot", "graft_nibble_l1", "graft_char_hist",
+  private val ten = Seq("graft_dot", "graft_nibble_l1", "graft_char_hist",
     "graft_srp_words", "graft_h32", "graft_top_cells", "graft_quant",
-    "graft_vdiv", "graft_word_grams")
+    "graft_vdiv", "graft_word_grams", "graft_dsum")
 
   test("every table function resolves through register and through GraftExtensions") {
-    assert(GraftFunctions.table.map(_._1).sorted == nine.sorted)
+    assert(GraftFunctions.table.map(_._1).sorted == ten.sorted)
     val ext = new SparkSessionExtensions
     new GraftExtensions().apply(ext)
     val viaExtensions = ext.registerFunctions(new SimpleFunctionRegistry)
     GraftFunctions.register(spark)
     val viaRegister = spark.sessionState.functionRegistry
-    nine.foreach { name =>
+    ten.foreach { name =>
       val id = FunctionIdentifier(name)
       assert(viaExtensions.functionExists(id), s"$name missing from GraftExtensions")
       assert(viaRegister.functionExists(id), s"$name missing from GraftFunctions.register")
