@@ -266,7 +266,7 @@ object SparkEntry {
     // index-health drift monitor: IVF recall over a bounded hash-drawn
     // probe sample vs the flat quantized scan, refit flag on breach.
     // Rows-only (KMeans fit); check.py bands the no-drift case;
-    // AnnProbeScan's stale mode shows the flag firing
+    // AnnRecallSpec's stale-index case shows the flag firing
     "ann_recall_probe" -> q((t: Tables) => Similarity.annRecallProbe(t)),
     "text_stats"      -> q(TextAnalysis.stats),
     "text_quality"    -> q(TextAnalysis.quality),

@@ -327,16 +327,7 @@ object Dedup {
       (grams, arrTab)
     }
 
-  /** @param probeOnly decade-instrument restriction (DedupProbeScan):
-    *   predicate over `doc_id` limiting ONE side of the band-bucket
-    *   self-join (band equality is symmetric, so probe ⋈ all covers
-    *   every pair with a probe member). Bypasses the memo — the
-    *   restricted pair table is not the shipped family's. */
-  def minhashLsh(t: Tables, probeOnly: Option[Column] = None): DataFrame =
-    probeOnly match {
-      case None => lshMemo(t)(minhashLshUncached(t))
-      case some => minhashLshUncached(t, some)
-    }
+  def minhashLsh(t: Tables): DataFrame = lshMemo(t)(minhashLshUncached(t))
 
   /** (doc_id, band, key) bucket table from a signature table — the
     * classic LSH band index: one exploded row per band, keyed so a
@@ -346,8 +337,7 @@ object Dedup {
     sig.select(col("doc_id"), explode(array(bandStructs("m"): _*)).as("b"))
       .select(col("doc_id"), col("b.band").as("band"), col("b.key").as("key"))
 
-  private def minhashLshUncached(t: Tables,
-      probeOnly: Option[Column] = None): DataFrame = {
+  private def minhashLshUncached(t: Tables): DataFrame = {
     // The signature table feeds the band join twice per band plus both
     // sides of the agreement count — without an explicit persist Spark
     // recomputes the whole shingle+md5+agg pipeline per branch (10 times
@@ -363,16 +353,10 @@ object Dedup {
 
     val x = buckets.toDF("doc_a", "band", "key")
     val y = buckets.toDF("doc_b", "band", "key")
-    val cand = (probeOnly match {
-      case None => x.join(y, Seq("band", "key"))
-        .filter(col("doc_a") < col("doc_b"))
-        .select(col("doc_a"), col("doc_b"))
-      case Some(p) => buckets.filter(p).toDF("doc_a", "band", "key")
-        .join(y, Seq("band", "key"))
-        .filter(col("doc_a") =!= col("doc_b"))
-        .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
-          greatest(col("doc_a"), col("doc_b")).as("doc_b"))
-    }).distinct()
+    val cand = x.join(y, Seq("band", "key"))
+      .filter(col("doc_a") < col("doc_b"))
+      .select(col("doc_a"), col("doc_b"))
+      .distinct()
 
     val sa = sig.toDF("doc_a" +: (0 until K).map(i => s"ma$i"): _*)
     val sb = sig.toDF("doc_b" +: (0 until K).map(i => s"mb$i"): _*)
@@ -879,9 +863,8 @@ object Dedup {
     * The oracle keeps the simpler single-block candidate CTE — both
     * schemes are lossless, so the final pair set is identical.
     */
-  def simhashHamming(t: Tables, checkpoint: Boolean = true): DataFrame =
-    blockedHammingPairs(simhash(t), "doc_id", "simhash", nBlocks = 4, maxHam = 2,
-      checkpoint = checkpoint)
+  def simhashHamming(t: Tables): DataFrame =
+    blockedHammingPairs(simhash(t), "doc_id", "simhash", nBlocks = 4, maxHam = 2)
 
   /** Pigeonhole-blocked Hamming pairs over any fingerprint table —
     * the candidate generator shared by [[simhashHamming]] (32-bit, 4
@@ -994,13 +977,12 @@ object Dedup {
       .mkString("array(", ", ", ")")
 
   /** The two Σ|bucket|² sums behind [[slack1KeyExpr]]'s choice —
-    * (single 8-bit blocks, uneven pair combos) — exposed for the
-    * tools.HamAudit instrument. ONE Spark job: both key sets ride a
-    * single explode with the combo blk ids offset past the single
-    * ones, then a two-level count → Σc² aggregation split on the
-    * offset (the fused form halved the chooser's floor cost on the
-    * sub-second mm dedup queries vs two separate jobs). */
-  private[graft] def slack1Volumes(fp: DataFrame, nBlocks: Int,
+    * (single 8-bit blocks, uneven pair combos). ONE Spark job: both
+    * key sets ride a single explode with the combo blk ids offset past
+    * the single ones, then a two-level count → Σc² aggregation split
+    * on the offset (the fused form halved the chooser's floor cost on
+    * the sub-second mm dedup queries vs two separate jobs). */
+  private def slack1Volumes(fp: DataFrame, nBlocks: Int,
       maxHam: Int): (Long, Long) = {
     val single = singleKeyExpr(nBlocks)
     // combo blk ids offset past the single range so one (blk, key)
@@ -1016,18 +998,8 @@ object Dedup {
     (rows.getOrElse(true, 0L), rows.getOrElse(false, 0L))
   }
 
-  /** @param leftOnly when set, restricts the LEFT join side to rows
-    *   matching the predicate (over `doc_id`) — the probe-restricted
-    *   Θ(P·N) form tools.DedupProbeScan uses to observe the SHIPPED
-    *   join shape at corpus decades where the full pair output is
-    *   itself near-quadratic (the soup corpus has ~6% of all pairs
-    *   within the threshold). Output = every qualifying pair with at
-    *   least one probe member, canonicalized. Shipped query callers
-    *   leave it None. */
   private[graft] def blockedHammingPairs(fp0: DataFrame, idCol: String,
-      wCol: String, nBlocks: Int, maxHam: Int,
-      leftOnly: Option[Column] = None,
-      checkpoint: Boolean = true): DataFrame = {
+      wCol: String, nBlocks: Int, maxHam: Int): DataFrame = {
     require(maxHam < nBlocks,
       s"pigeonhole guarantee needs maxHam < nBlocks (got $maxHam >= $nBlocks)")
     val fp = fp0.select(col(idCol).as("doc_id"), col(wCol).as("w")).persist()
@@ -1039,20 +1011,11 @@ object Dedup {
       explode(expr(keyExpr)).as("b"))
       .select(col("doc_id"), col("w"),
         col("b.blk").as("blk"), col("b.key").as("key"))
-    val left = leftOnly.fold(blocks)(p => blocks.filter(p))
-    val joined = left.toDF("doc_a", "fa", "blk", "key")
+    // symmetric self-join: doc_a < doc_b is already canonical
+    val canon = blocks.toDF("doc_a", "fa", "blk", "key")
       .join(blocks.toDF("doc_b", "fb", "blk", "key"), Seq("blk", "key"))
-    val canon = leftOnly match {
-      // symmetric self-join: doc_a < doc_b already canonical
-      case None => joined.filter(col("doc_a") < col("doc_b"))
-        .select(col("doc_a"), col("doc_b"), col("fa"), col("fb"))
-      // probe-restricted: both orders can surface; canonicalize
-      case Some(_) => joined.filter(col("doc_a") =!= col("doc_b"))
-        .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
-          greatest(col("doc_a"), col("doc_b")).as("doc_b"),
-          when(col("doc_a") < col("doc_b"), col("fa")).otherwise(col("fb")).as("fa"),
-          when(col("doc_a") < col("doc_b"), col("fb")).otherwise(col("fa")).as("fb"))
-    }
+      .filter(col("doc_a") < col("doc_b"))
+      .select(col("doc_a"), col("doc_b"), col("fa"), col("fb"))
     // Verify BEFORE the distinct: bit_count(xor) is one codegen'd
     // instruction per candidate, while distinct is a shuffle+agg over
     // every candidate row — and the candidate stream is Σ|bucket|²-
@@ -1069,10 +1032,6 @@ object Dedup {
       .filter(col("hamming") <= maxHam)
       .select(col("doc_a"), col("doc_b"), col("hamming"))
       .distinct()
-    // checkpoint=false is for PLAN INSPECTION only (tools.PlanDump):
-    // the fp cache releases immediately, so executing that plan
-    // recomputes the fingerprint build (the editDistance precedent)
-    if (!checkpoint) { fp.unpersist(); return verified }
     val out = verified.localCheckpoint()
     fp.unpersist()
     out
@@ -1110,16 +1069,7 @@ object Dedup {
     * join suffers never forms. Exact common counts are then computed
     * only for surviving candidate pairs.
     */
-  /** @param probeOnly decade-instrument restriction (DedupProbeScan):
-    *   predicate over `doc_id` limiting ONE side of the prefix
-    *   self-join. Lossless for pairs with a probe member: the prefix
-    *   theorem above is symmetric (J ≥ θ forces the two PREFIXES to
-    *   intersect), so probe-prefix ⋈ all-prefix finds every such pair.
-    *   None (default, every shipped query) = full family, plan
-    *   unchanged. */
-  def ngramJaccard(t: Tables,
-      probeOnly: Option[Column] = None,
-      checkpoint: Boolean = true): DataFrame = {
+  def ngramJaccard(t: Tables): DataFrame = {
     import t.spark.implicits._
     // (doc_id, n, gram): grams dedupe WITHIN a doc via array_distinct
     // on the per-doc gram array, carrying n = |gram set| on every row
@@ -1141,17 +1091,11 @@ object Dedup {
       .select($"doc_id", explode(expr(
         "slice(arr, 1, size(arr) - (size(arr) + 9) div 10 + 1)")).as("gram"))
       .persist() // BOTH sides of the candidate self-join read it
-    val cand = (probeOnly match {
-      case None => prefix.toDF("doc_a", "gram")
-        .join(prefix.toDF("doc_b", "gram"), "gram")
-        .filter($"doc_a" < $"doc_b")
-        .select($"doc_a", $"doc_b")
-      case Some(p) => prefix.filter(p).toDF("doc_a", "gram")
-        .join(prefix.toDF("doc_b", "gram"), "gram")
-        .filter($"doc_a" =!= $"doc_b") // both orders surface; canonicalize
-        .select(least($"doc_a", $"doc_b").as("doc_a"),
-          greatest($"doc_a", $"doc_b").as("doc_b"))
-    }).distinct()
+    val cand = prefix.toDF("doc_a", "gram")
+      .join(prefix.toDF("doc_b", "gram"), "gram")
+      .filter($"doc_a" < $"doc_b")
+      .select($"doc_a", $"doc_b")
+      .distinct()
     // exact |A∩B| per surviving candidate pair as a row-local
     // size(array_intersect) over the two docs' memoized sorted gram
     // arrays (r22 — replaces the candDocs semi-join + per-gram pair
@@ -1175,10 +1119,6 @@ object Dedup {
       .select($"doc_a", $"doc_b",
         ($"common".cast(DoubleType) / ($"na" + $"nb" - $"common"))
           .as("jaccard"))
-    // checkpoint=false is for PLAN INSPECTION only (tools.PlanDump):
-    // the prefix persist releases immediately, so executing that plan
-    // recomputes it
-    if (!checkpoint) { prefix.unpersist(); return out }
     val cp = out.localCheckpoint() // materialize so the query-local
                                    // persist can be released
                                    // (grams/arrTab stay memoized for
@@ -1371,19 +1311,10 @@ object Dedup {
     * [[edKeys]]), so nothing within [[EdMaxDist]] is dropped. Split
     * out so DedupSpec can pin the candidate COUNT (Σ|bucket|² shape)
     * independently of the verify. */
-  private[graft] def edCandidatePairs(keys: DataFrame,
-      probeOnly: Option[Column] = None): DataFrame = {
+  private[graft] def edCandidatePairs(keys: DataFrame): DataFrame = {
     val longKeys = keys.filter(col("l") >= EdBlockMinLen)
-    // probeOnly (decade instrument): restrict the PROBE-WINDOW side to
-    // the probe docs — the PassJoin pigeonhole is one-directional
-    // (blocks(a) ⋈ probes(b) finds every qualifying (a, b): some block
-    // of a is edit-free and b's ±d windows cover its aligned content —
-    // the same asymmetry incrementalEdit's index form relies on), so
-    // index(full) ⋈ probes(restricted) is lossless for every pair with
-    // a probe member, at Θ(P·buckets) cost instead of Σ|bucket|².
-    val probeKeys = probeOnly.fold(longKeys)(p => longKeys.filter(p))
     val cand = edBlocks(longKeys).toDF("doc_a", "ha1", "ha2", "bl", "bj", "bc")
-      .join(edProbes(probeKeys).toDF("doc_b", "hb1", "hb2", "bl", "bj", "bc"),
+      .join(edProbes(longKeys).toDF("doc_b", "hb1", "hb2", "bl", "bj", "bc"),
         Seq("bl", "bj", "bc"))
       .filter(col("doc_a") =!= col("doc_b"))
       .filter(edHistL1(keys.sparkSession, col("ha1"), col("ha2"),
@@ -1416,27 +1347,17 @@ object Dedup {
     cand.union(shortPairs).distinct()
   }
 
-  /** @param probeOnly decade-instrument restriction (DedupProbeScan):
-    *   predicate over `doc_id` limiting the probe-window side of the
-    *   candidate join — output then covers every pair with a probe
-    *   member (plus the cheap unrestricted short-key residue) at
-    *   Θ(P·N) cost. None (the default, every shipped query) is the
-    *   full family, plan unchanged. */
-  def editDistance(t: Tables, checkpoint: Boolean = true,
-      probeOnly: Option[Column] = None): DataFrame = {
+  def editDistance(t: Tables): DataFrame = {
     import t.spark.implicits._
     val keys = edKeys(t.widen(t.documents))
       .persist() // feeds blocks, probes, the short block, both verify joins
-    val out = edCandidatePairs(keys, probeOnly)
+    val out = edCandidatePairs(keys)
       .join(keys.select($"doc_id".as("doc_a"), $"k".as("ka"), $"l".as("la")), "doc_a")
       .join(keys.select($"doc_id".as("doc_b"), $"k".as("kb"), $"l".as("lb")), "doc_b")
       .filter(abs($"la" - $"lb") <= EdMaxDist) // ed ≥ |len diff|: free prune
       .withColumn("dist", levenshtein($"ka", $"kb", EdMaxDist))
       .filter($"dist" >= 0 && $"dist" <= EdMaxDist) // -1 = beyond band
       .select($"doc_a", $"doc_b", $"dist")
-    // checkpoint=false is for PLAN INSPECTION only (tools.PlanDump): the
-    // caches release immediately, so executing that plan recomputes
-    if (!checkpoint) { keys.unpersist(); return out }
     val cp = out.localCheckpoint()
     keys.unpersist()
     cp
@@ -1573,16 +1494,7 @@ object Dedup {
     * semi-join pattern: exact |A∩B| is computed only over docs that
     * survived candidate generation.
     */
-  /** @param probeOnly decade-instrument restriction (DedupProbeScan):
-    *   predicate over `doc_id`. The asymmetric prefix join needs BOTH
-    *   orientations covered (the probe can be the small OR the large
-    *   side), so the restricted form is the union
-    *   prefix[probes] ⋈ grams[all]  ∪  prefix[all] ⋈ grams[probes] —
-    *   each Θ(P·postings), together lossless for every pair with a
-    *   probe member. None (default, every shipped query) = full
-    *   family, plan unchanged. */
-  def containment(t: Tables, checkpoint: Boolean = true,
-      probeOnly: Option[Column] = None): DataFrame = {
+  def containment(t: Tables): DataFrame = {
     import t.spark.implicits._
     // (doc_id, n, gram) with n = |doc's distinct gram set| carried on
     // every row FOR FREE: grams dedupe WITHIN a doc (array_distinct on
@@ -1590,9 +1502,7 @@ object Dedup {
     // `.distinct()` — a 250M-row exchange at nd1000 — and the
     // 250M-row `grams ⋈ sz` join that re-attached n to the full join
     // side were both paying shuffles for values computable in the
-    // per-doc narrow map. (r19, the nd1000 stage audit: the restricted
-    // union re-ran those pipelines once per orientation and filled the
-    // instrument node's scratch where r18 had measured 494 s.)
+    // per-doc narrow map (r19 nd1000 stage audit).
     // shared (grams, arrTab) memo — ngramJaccard reads the identical
     // lineage, so the build runs once per sweep (gramPostings). The
     // τ-prefix (first n − ⌈n/2⌉ + 1 = ⌊n/2⌋ + 1 grams in global
@@ -1603,32 +1513,15 @@ object Dedup {
       .select($"doc_id", size($"arr").as("n"), explode(expr(
         "slice(arr, 1, size(arr) div 2 + 1)")).as("gram"))
       .select($"doc_id", $"gram", $"n")
-      .persist() // BOTH orientations of the restricted union read it
+      .persist()
     // (n, doc_id) is the total order that picks the "smaller" side, so
     // ties break deterministically and each unordered pair appears once
-    val pSz = prefix
-    val gSz = grams.select($"doc_id", $"gram", $"n")
-    def orient(small: DataFrame, large: DataFrame) =
-      small.toDF("doc_a", "gram", "na")
-        .join(large.toDF("doc_b", "gram", "nb"), "gram")
-        .filter($"na" < $"nb" || ($"na" === $"nb" && $"doc_a" < $"doc_b"))
-        .select($"doc_a", $"doc_b")
-    val cand = (probeOnly match {
-      case None => orient(pSz, gSz)
-      // probe as the small side ∪ probe as the large side — each join
-      // is probe-bounded on one input, together covering every
-      // orientation a probe pair can take; prefix/grams are persisted,
-      // so the second orientation reuses the first's builds. The
-      // probe-restricted side carries a broadcast hint: this branch is
-      // the DedupProbeScan instrument only (shipped queries pass None
-      // and stay hint-free — the ScaleSpec rule), its probe set is
-      // bounded by the instrument's mods, and without the hint BOTH
-      // orientations shuffle a corpus-sized table by gram to meet a
-      // few-MB probe side (375M shuffled rows at nd1000 — the measured
-      // 55 GB scratch peak and 1.76x-vs-jaccard wall, SCALING.md r19).
-      case Some(p) => orient(broadcast(pSz.filter(p)), gSz)
-        .union(orient(pSz, broadcast(gSz.filter(p))))
-    }).distinct()
+    val cand = prefix.toDF("doc_a", "gram", "na")
+      .join(grams.select($"doc_id", $"gram", $"n")
+        .toDF("doc_b", "gram", "nb"), "gram")
+      .filter($"na" < $"nb" || ($"na" === $"nb" && $"doc_a" < $"doc_b"))
+      .select($"doc_a", $"doc_b")
+      .distinct()
     // exact |A∩B| per surviving candidate pair as a row-local
     // size(array_intersect) over the two docs' memoized sorted gram
     // arrays (r22 — same replacement as [[ngramJaccard]]'s: the
@@ -1646,10 +1539,6 @@ object Dedup {
         ($"common".cast(DoubleType) / $"na").as("containment"))
     // grams/arrTab stay memoized for ngramJaccard (SweepCaches drains
     // them); only the query-local persist releases here
-    if (!checkpoint) {
-      prefix.unpersist()
-      return out
-    }
     val cp = out.localCheckpoint()
     prefix.unpersist()
     cp

@@ -760,10 +760,9 @@ object Multimodal {
     * a brute-force all-pairs join and that batch-mate images (same
     * id-div-16 base pattern) are found.
     */
-  def imageNearDup(t: Tables, checkpoint: Boolean = true): DataFrame =
+  def imageNearDup(t: Tables): DataFrame =
     graft.dedup.Dedup.blockedHammingPairs(
-      imageAHash(t), "media_id", "ahash", nBlocks = 8, maxHam = 7,
-      checkpoint = checkpoint)
+      imageAHash(t), "media_id", "ahash", nBlocks = 8, maxHam = 7)
 
   val imageNearDupSql: String =
     s"""$ahashCte,
@@ -1259,11 +1258,10 @@ object Multimodal {
     * fingerprint-confidence floor a real audio matcher applies before
     * trusting a match.
     */
-  def audioNearDup(t: Tables, checkpoint: Boolean = true): DataFrame =
+  def audioNearDup(t: Tables): DataFrame =
     graft.dedup.Dedup.blockedHammingPairs(
       audioFingerprint(t).filter(col("n_frames") >= 17),
-      "media_id", "fp", nBlocks = 8, maxHam = 7,
-      checkpoint = checkpoint)
+      "media_id", "fp", nBlocks = 8, maxHam = 7)
 
   val audioNearDupSql: String =
     s"""$audioFpCte,

@@ -33,9 +33,12 @@ object Executors {
   /** selectreduce.py:4-16 — concatenate all matched chunks. */
   val selectReduce: ReduceUdf = (_, vs, _) => vs.map(v => ("filtered", v))
 
-  /** wordcountmap.py:9-27 — lowercase \w+ tokens, partial count per
-    * split (emitted here per token; Spark's partial aggregation is the
-    * split-level combine).
+  /** wordcountmap.py:9-27 — lowercase \w+ tokens. The reference emits
+    * a partial count per split; this emits one (word, "1") pair per
+    * token, and nothing combines them before the shuffle:
+    * MapleJuice.juice is a typed groupByKey.flatMapGroups, which plans
+    * no partial aggregate, so every pair crosses the exchange and the
+    * reduce side does all the counting.
     */
   private val WordRe = java.util.regex.Pattern.compile("\\w+")
 

@@ -323,7 +323,7 @@ object CorpusOps {
     * Covered-position semantics are identical in both engines: word i
     * survives iff no duplicated span starts in [i-15, i].
     */
-  def scrubSpans(t: Tables, checkpoint: Boolean = true): DataFrame = {
+  def scrubSpans(t: Tables): DataFrame = {
     import t.spark.implicits._
     val docs = t.widen(t.documents)
     val spans = docs
@@ -359,8 +359,6 @@ object CorpusOps {
           .as("clean_text"),
         size($"toks").cast(LongType).as("n_words"),
         (size($"toks") - size($"keep")).cast(LongType).as("n_removed"))
-    // checkpoint=false is for PLAN INSPECTION only (tools.PlanDump)
-    if (!checkpoint) { spans.unpersist(); return out }
     val cp = out.localCheckpoint()
     spans.unpersist()
     cp
@@ -445,10 +443,10 @@ object CorpusOps {
   def contamination(t: Tables): DataFrame =
     contamMemo(t)(contaminationUncached(t).localCheckpoint())
 
-  /** The live plan behind the memo — the plan-audit surfaces
-    * (tools.PlanDump, ScaleSpec's no-forced-broadcast pin) must inspect
-    * THIS form: the memoized [[contamination]] analyzes to a
-    * LogicalRDD, which would pass any plan assertion vacuously. */
+  /** The live plan behind the memo — a plan audit (ScaleSpec's
+    * no-forced-broadcast pin) must inspect THIS form: the memoized
+    * [[contamination]] analyzes to a LogicalRDD, which would pass any
+    * plan assertion vacuously. */
   private[graft] def contaminationUncached(t: Tables): DataFrame = {
     import t.spark.implicits._
     val docs = t.widen(t.documents)

@@ -212,8 +212,8 @@ object Similarity {
     * clusteredness: these synthetic embeddings are near-uniform — the
     * adversarial case, where recall needs a constant cell fraction.
     * Clustered real corpora hold recall with nprobe ~constant as
-    * nlist grows √N (the actual 100 TB win); the AnnProbeScan sweep
-    * in SCALING.md records both curves' local anchor.
+    * nlist grows √N (the actual 100 TB win); the recall sweeps in
+    * SCALING.md record both curves' local anchor.
     */
   def nprobeFor(nlist: Int): Int = math.max(10, nlist * 5 / 8)
 
@@ -229,22 +229,20 @@ object Similarity {
     * 8–32 ≈ nlist/40, sub-linear in nlist across the observed decade.
     * This is the fit the study itself ran, priced for production: the
     * subsample's flat truth scan is Θ(P·N) with P ≈ [[FitProbeCount]]
-    * (probeMod derives from N unless given), each ladder point costs
+    * (the probe modulus derives from N), each ladder point costs
     * one cell-pruned search ∝ nprobe, and the result is a per-corpus
     * calibration artifact — run it once per index build/refresh, not
     * per query. Shipped queries keep the uniform-calibrated default
     * (their recall bands are calibrated against it); this is the
     * opt-in knob for corpora whose geometry the default over-serves.
     * Driver state is the subsampled pair sets (P·k ids — bounded by
-    * the probeMod derivation, never corpus-sized).
+    * the probe-modulus derivation, never corpus-sized).
     */
   def nprobeFitted(t: Tables, target: Double = 0.97,
-      probeMod: Int = 0,
       ladder: Seq[Int] = Seq(4, 8, 16, 32, 64, 128)): Int = {
     val n = corpusSize(t)
     val nl = nlistFor(n)
-    val pm = if (probeMod > 0) probeMod
-      else math.max(13L, n / FitProbeCount).toInt
+    val pm = math.max(13L, n / FitProbeCount).toInt
     def pairs(df: DataFrame): Set[(Long, Long)] =
       df.select(col("probe_id"), col("cand_id")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -270,8 +268,8 @@ object Similarity {
     * total pair work at fixed nlist — constant across the derivation.
     * Measured at sf0.1/nlist=32: assign 4/5/6 → pair recall
     * 0.790/0.899/0.961 vs the 0.9 band — ⌈√nlist⌉ is the smallest
-    * integer rule that clears it with margin (AnnProbeScan sweep,
-    * recorded in SCALING.md).
+    * integer rule that clears it with margin (recall sweep recorded
+    * in SCALING.md).
     */
   def assignFor(nlist: Int): Int = math.ceil(math.sqrt(nlist)).toInt
 
@@ -604,20 +602,10 @@ object Similarity {
     * ivfPairKnobsFor for the regime history (the r17 decade catch and
     * why its nlist ∝ N² successor had to go). Explicit (> 0) args
     * override knobs; `bandKnobs` overrides the banding (Some((0,0))
-    * forces it off — the instrument's ladder-shape measurement).
-    *
-    * @param leftOnly optional predicate over `id_a` restricting the
-    *   candidate join's left side — the probe-restricted Θ(P·N) form
-    *   tools.DedupProbeScan uses at corpus decades where even the
-    *   bounded full pair output is instrument-hostile (the synthetic
-    *   corpus has ~0.8% of ALL pairs above minCos=0.3, so the true
-    *   output itself is ~N²/125). Output = every qualifying pair
-    *   with at least one member matching, canonicalized. Shipped
-    *   query callers leave it None.
+    * forces it off).
     */
   def embeddingNearDupIvf(t: Tables, nlist: Int = 0, assign: Int = 0,
       minCos: Double = 0.3,
-      leftOnly: Option[Column] = None,
       bandKnobs: Option[(Int, Int)] = None): DataFrame = {
     val n = corpusSize(t)
     val derived = ivfPairKnobsFor(n)
@@ -626,7 +614,7 @@ object Similarity {
     // (bandBits, nBands) for the in-cell SRP band keys: derived with
     // the regime (r18 — bands replace r17's nlist ∝ N² cell shrink;
     // see ivfPairKnobsFor/pairBandKnobsFor), overridable for
-    // instruments and specs; (0, _) or (_, 0) forces bands off.
+    // specs; (0, _) or (_, 0) forces bands off.
     val (bb, nBands0) = bandKnobs.getOrElse(
       if (ivfPairBanded(n)) pairBandKnobsFor(n, nl, a, minCos) else (0, 0))
     val nBands = if (bb <= 0) 0 else nBands0
@@ -664,7 +652,7 @@ object Similarity {
       // joined the candidate list back to the vector table — an
       // exchange of |collisions| rows each carrying a 64-double
       // vector (~250 GB at the nd1000 instrument point: 5.1e8
-      // collisions measured by tools.CellAudit — the second disk wall
+      // collisions measured at that point — the second disk wall
       // the decade instrument exposed, after the assignment window).
       // Here vector bytes scale with the KEY table
       // (N·assign·nBands rows — derivation-bounded, data-independent,
@@ -672,39 +660,23 @@ object Similarity {
       // and collisions stream through the cos filter inside
       // whole-stage codegen, so only the τ-verified pairs land.
       val keysV = keys.join(e.select(col("vec_id"), col("v"), col("nrm")), "vec_id")
-      val left0 = keysV.toDF("id_a", "cell", "band", "bv", "va", "na")
-      val joined = leftOnly.fold(left0)(p => left0.filter(p))
+      // symmetric self-join: id_a < id_b is already canonical
+      keysV.toDF("id_a", "cell", "band", "bv", "va", "na")
         .join(keysV.toDF("id_b", "cell", "band", "bv", "vb", "nb"), joinCols)
-      // cos is symmetric bit-for-bit (per-element products commute and
-      // the fold order is positional), so it needs no canonicalization
-      val cosed = joined
         .withColumn("cos", dot(col("va"), col("vb")) / (col("na") * col("nb")))
         .filter(col("cos") >= minCos)
-      (leftOnly match {
-        // symmetric self-join: id_a < id_b is already canonical
-        case None => cosed.filter(col("id_a") < col("id_b"))
-          .select(col("id_a"), col("id_b"), col("cos"))
-        // probe-restricted: both orders surface; canonicalize
-        case Some(_) => cosed.filter(col("id_a") =!= col("id_b"))
-          .select(least(col("id_a"), col("id_b")).as("id_a"),
-            greatest(col("id_a"), col("id_b")).as("id_b"), col("cos"))
-      }).distinct() // a pair may collide in several cells/bands; cos identical
+        .filter(col("id_a") < col("id_b"))
+        .select(col("id_a"), col("id_b"), col("cos"))
+        .distinct() // a pair may collide in several cells/bands; cos identical
     } else {
       // Unbanded (small-N) regime: the recorded shape — narrow
       // candidate distinct, then the two vector joins (|pairs| is
       // Σ|cell|²-bounded by the knob derivation at these sizes).
-      val leftKeys = keys.withColumnRenamed("vec_id", "id_a")
-      val cand0 = leftOnly.fold(leftKeys)(p => leftKeys.filter(p))
+      val cand = keys.withColumnRenamed("vec_id", "id_a")
         .join(keys.withColumnRenamed("vec_id", "id_b"), joinCols)
-      val cand = (leftOnly match {
-        // symmetric self-join: id_a < id_b is already canonical
-        case None => cand0.filter(col("id_a") < col("id_b"))
-          .select(col("id_a"), col("id_b"))
-        // probe-restricted: both orders surface; canonicalize
-        case Some(_) => cand0.filter(col("id_a") =!= col("id_b"))
-          .select(least(col("id_a"), col("id_b")).as("id_a"),
-            greatest(col("id_a"), col("id_b")).as("id_b"))
-      }).distinct() // a pair may share several assigned cells
+        .filter(col("id_a") < col("id_b"))
+        .select(col("id_a"), col("id_b"))
+        .distinct() // a pair may share several assigned cells
       val va = e.select(col("vec_id").as("id_a"), col("v").as("va"), col("nrm").as("na"))
       val vb = e.select(col("vec_id").as("id_b"), col("v").as("vb"), col("nrm").as("nb"))
       cand.join(va, "id_a").join(vb, "id_b")
@@ -748,9 +720,8 @@ object Similarity {
     * closure can only merge MORE than the direct pair list).
     */
   /** The banded pair join's key table: (vec_id, cell[, band, bv]) —
-    * one row per assigned cell × SRP band. Factored out so
-    * tools.CellAudit can measure the EXACT shipped geometry's
-    * second moments (Σ|bucket|² = the pair-join output).
+    * one row per assigned cell × SRP band (Σ|bucket|² over it is the
+    * pair-join output).
     *
     * Cell assignment is row-local (graft.functions.TopCells): the old
     * crossJoin(broadcast(centroids)) + row_number window materialized
@@ -819,25 +790,13 @@ object Similarity {
   // reusing the batch cluster map).
   private[graft] val semanticMemo = Memo[DataFrame]("sim")
 
-  def semanticDedup(t: Tables, minCos: Double = 0.0,
-      nlist: Int = 0, assign: Int = 0,
-      bandKnobs: Option[(Int, Int)] = None): DataFrame = {
+  def semanticDedup(t: Tables, minCos: Double = 0.0): DataFrame = {
     val tau = if (minCos > 0) minCos else semanticTauCalibrated(t)
-    // memoize only the derived operating point (explicit blocking
-    // knobs are instrument/spec territory — same contract as
-    // minhashLsh's probeOnly bypass)
-    if (nlist <= 0 && assign <= 0 && bandKnobs.isEmpty)
-      semanticMemo(t, tau) {
-        semanticDedupUncached(t, tau, nlist, assign, bandKnobs).localCheckpoint()
-      }
-    else semanticDedupUncached(t, tau, nlist, assign, bandKnobs)
+    semanticMemo(t, tau)(semanticDedupUncached(t, tau).localCheckpoint())
   }
 
-  private def semanticDedupUncached(t: Tables, tau: Double,
-      nlist: Int, assign: Int,
-      bandKnobs: Option[(Int, Int)]): DataFrame = {
-    val pairs = embeddingNearDupIvf(t, nlist = nlist, assign = assign,
-      minCos = tau, bandKnobs = bandKnobs)
+  private def semanticDedupUncached(t: Tables, tau: Double): DataFrame = {
+    val pairs = embeddingNearDupIvf(t, minCos = tau)
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
     val cc = graft.dedup.Dedup.connectedComponents(pairs)
       .select(col("doc_id").as("vec_id"), col("cluster_id").as("rep_id"))
@@ -1116,7 +1075,7 @@ object Similarity {
     * Knobs derive from corpus size exactly like [[annIvf]].
     */
   def annRangeIvf(t: Tables, nlist: Int = 0, nprobe: Int = 0,
-      minCos: Double = 0.3, checkpoint: Boolean = true): DataFrame = {
+      minCos: Double = 0.3): DataFrame = {
     import org.apache.spark.ml.functions.array_to_vector
     val nl = if (nlist > 0) nlist else nlistFor(corpusSize(t))
     val np0 = if (nprobe > 0) nprobe else nprobeFor(nl)
@@ -1147,11 +1106,6 @@ object Similarity {
       .withColumn("cos", dot(col("vp"), col("vc")) / (col("np") * col("nc")))
       .filter(col("cos") >= minCos)
       .select(col("probe_id"), col("cand_id"), col("cos"))
-    // checkpoint=false is for plan review only (tools.PlanDump): it skips
-    // the materialization so the explain shows the real pipeline. The
-    // cell-assignment cache is released on BOTH paths (r19 advisor):
-    // the returned plan just recomputes it lazily if executed.
-    if (!checkpoint) { assigned.unpersist(); return thresholded }
     val out = thresholded.localCheckpoint()
     assigned.unpersist()
     out
@@ -1170,11 +1124,11 @@ object Similarity {
     * measured 5/8 cell fraction). Measured recall@5 vs brute force at
     * the derived points: 0.883 at sf0.01 (16/10) and 0.930 at sf0.1
     * (32/20) — solid margin over the 0.8 recall band (AnnRecallSpec +
-    * check.py BAND_CHECKS; AnnProbeScan sweep in SCALING.md). Passing
+    * check.py BAND_CHECKS; recall sweep in SCALING.md). Passing
     * explicit nlist/nprobe (> 0) overrides the derivation.
     */
   def annIvf(t: Tables, nlist: Int = 0, nprobe: Int = 0,
-      probeMod: Int = 13, checkpoint: Boolean = true): DataFrame = {
+      probeMod: Int = 13): DataFrame = {
     import org.apache.spark.ml.functions.array_to_vector
     val nl = if (nlist > 0) nlist else nlistFor(corpusSize(t))
     val np = if (nprobe > 0) nprobe else nprobeFor(nl)
@@ -1220,11 +1174,6 @@ object Similarity {
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= 5)
       .select(col("probe_id"), col("cand_id"), col("rnk"), col("cos"))
-    // checkpoint=false is for plan review only (tools.PlanDump): it skips
-    // the materialization so the explain shows the real pipeline. The
-    // cell-assignment cache is released on BOTH paths (r19 advisor):
-    // the returned plan just recomputes it lazily if executed.
-    if (!checkpoint) { assigned.unpersist(); return ranked }
     val out = ranked.localCheckpoint()
     assigned.unpersist()
     out
@@ -1308,8 +1257,7 @@ object Similarity {
        |WHERE rnk <= 5""".stripMargin.replace("\n", " ")
   }
 
-  def annLsh(t: Tables, tables: Int = 12, planes: Int = 4,
-      checkpoint: Boolean = true): DataFrame = {
+  def annLsh(t: Tables, tables: Int = 12, planes: Int = 4): DataFrame = {
     val TABLES = tables
     val PLANES = planes
     val e = withNorm(t)
@@ -1366,8 +1314,6 @@ object Similarity {
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= 5)
       .select(col("probe_id"), col("cand_id"), col("rnk"), col("cos"))
-    // checkpoint=false is for PLAN INSPECTION only (tools.PlanDump)
-    if (!checkpoint) { buckets.unpersist(); return out }
     val cp = out.localCheckpoint()
     buckets.unpersist()
     cp
@@ -2081,9 +2027,9 @@ object Similarity {
     * re-rank recovers nearly everything the 8-byte codes blur).
     */
   def annPq(t: Tables, m: Int = 8, ks: Int = 256, rerank: Int = 0,
-      probeMod: Int = 13, allowFullScan: Boolean = false): DataFrame = {
+      allowFullScan: Boolean = false): DataFrame = {
     val nGuard = corpusSize(t)
-    flatScanGuard("annPq", nGuard / math.max(1, probeMod), nGuard,
+    flatScanGuard("annPq", nGuard / 13, nGuard,
       allowFullScan, "annIvfPq")
     val rr = if (rerank > 0) rerank else rerankFor(corpusSize(t))
     val e = withNorm(t)
@@ -2115,7 +2061,7 @@ object Similarity {
           (id, uhat.toSeq)
         }
       }.toDF("cand_id", "uhat")
-    val probes = e.filter(col("vec_id") % probeMod === 0 && col("nrm") > 0)
+    val probes = e.filter(col("vec_id") % 13 === 0 && col("nrm") > 0)
       .select(col("vec_id").as("probe_id"), col("v").as("vp"), col("nrm").as("np"),
         graft.functions.GraftFunctions.vdiv(col("v"), col("nrm")).as("up"))
     val wAdc = Window.partitionBy(col("probe_id"))
@@ -2307,7 +2253,7 @@ object Similarity {
   }
 
   def annIvfPq(t: Tables, m: Int = 8, ks: Int = 256, nlist: Int = 0,
-      nprobe: Int = 0, rerank: Int = 0, probeMod: Int = 13): DataFrame = {
+      nprobe: Int = 0, rerank: Int = 0): DataFrame = {
     val rr = if (rerank > 0) rerank else rerankFor(corpusSize(t))
     val nl = if (nlist > 0) nlist else nlistFor(corpusSize(t))
     val np = if (nprobe > 0) nprobe else nprobeFor(nl)
@@ -2315,13 +2261,13 @@ object Similarity {
     val model = coarseQuantizer(t, nl)
     val cents = model.clusterCenters.map(_.toArray)
     val codes = ivfPqDecodedCodes(t, m, ks, nl)
-    val probes = e.filter(col("vec_id") % probeMod === 0 && col("nrm") > 0)
+    val probes = e.filter(col("vec_id") % 13 === 0 && col("nrm") > 0)
       .select(col("vec_id").as("probe_id"), col("v").as("vp"),
         col("nrm").as("pnrm"),
         graft.functions.GraftFunctions.vdiv(col("v"), col("nrm")).as("up"))
     // stage 1 — same centroid metric as the whole IVF family, as the
     // row-local TopCells multi-assign (the crossJoin+window form sorted
-    // (N/probeMod)·nlist vector-wide rows; TopCellsSpec pins the same
+    // (N/13)·nlist vector-wide rows; TopCellsSpec pins the same
     // (cdist asc, cell asc) assignment; cellJoin re-pins width on cell)
     graft.functions.GraftFunctions.register(t.spark)
     val probeCells = probes.select(col("probe_id"), col("up"),
@@ -2364,10 +2310,9 @@ object Similarity {
       .select(col("probe_id"), col("cand_id"), col("rnk"), col("cos"))
   }
 
-  def annIvfInt8(t: Tables, nlist: Int = 0, nprobe: Int = 0,
-      probeMod: Int = 13): DataFrame = {
-    val nl = if (nlist > 0) nlist else nlistFor(corpusSize(t))
-    val np = if (nprobe > 0) nprobe else nprobeFor(nl)
+  def annIvfInt8(t: Tables): DataFrame = {
+    val nl = nlistFor(corpusSize(t))
+    val np = nprobeFor(nl)
     val e = withNorm(t)
     val model = coarseQuantizer(t, nl)
     // The RESIDENT table is codes-only (vec_id, cell, scale, 64 int8
@@ -2380,12 +2325,12 @@ object Similarity {
       .persist()
 
     val centroids = model.clusterCenters.map(_.toArray.toSeq).toSeq
-    val probes = withQuantCols(e.filter(col("vec_id") % probeMod === 0))
+    val probes = withQuantCols(e.filter(col("vec_id") % 13 === 0))
       .select(col("vec_id").as("probe_id"), col("v").as("vp"),
         col("qmax").as("qp"), col("codes").cast("array<double>").as("cp"))
     // same centroid metric as annIvf (rank by ||c||² - 2p·c), as the
     // row-local TopCells multi-assign (the crossJoin+window form sorted
-    // (N/probeMod)·nlist vector-wide rows; TopCellsSpec pins the same
+    // (N/13)·nlist vector-wide rows; TopCellsSpec pins the same
     // (cdist asc, cell asc) assignment; cellJoin re-pins width on cell)
     graft.functions.GraftFunctions.register(t.spark)
     val probeCells = probes.select(col("probe_id"), col("qp"), col("cp"),
@@ -2436,8 +2381,8 @@ object Similarity {
     * already-aggregated rows — the accepted Quiet.windowWarn class).
     * recall = Σhits / Σk is one IEEE division of exact ints; rows-only
     * at the driver (KMeans centroids), check.py bands the no-drift
-    * case at recall >= floor and flag agreement; AnnProbeScan's
-    * `stale` mode demonstrates the flag firing against a deliberately
+    * case at recall >= floor and flag agreement; AnnRecallSpec's
+    * stale-index case shows the flag firing against a deliberately
     * mis-mapped index.
     *
     * `index` overrides the (cell table, centroids) pair to measure a
@@ -2479,7 +2424,8 @@ object Similarity {
     // position-ascending tiebreak exactly the window form's
     // (cdist asc, cell asc); the position maps back through the
     // cell-id literal so an override `index` with remapped cells
-    // (AnnProbeScan stale) still ranks against the table it declares.
+    // (AnnRecallSpec's stale index) still ranks against the table it
+    // declares.
     val ordered = cents.sortBy(_._1)
     val np = nprobeFor(cents.size)
     graft.functions.GraftFunctions.register(t.spark)

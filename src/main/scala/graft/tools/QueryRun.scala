@@ -16,7 +16,7 @@ object QueryRun {
     val sfDir = args(0); val outDir = args(1); val names = args.drop(2).toSeq
     val unknown = names.filterNot(graft.SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val spark = DriverSession.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val spark = DriverSession.build(DriverSession.cpus)
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       graft.SparkEntry.queries(name)(spark, sfDir)

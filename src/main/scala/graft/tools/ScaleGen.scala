@@ -163,11 +163,11 @@ object ScaleGen {
     // planted pairs span a similarity SPECTRUM around each dedup
     // family's threshold (levenshtein 0-12 on the 64-char key, word-
     // 5-gram Jaccard/containment straddling 0.1/0.5) instead of the
-    // degenerate jaccard=1/dist=0 of exact copies. DedupProbeScan's
-    // decade recall bands need such boundary pairs: on the default
-    // corpus a probe sample would catch only a handful of exact-copy
-    // truth pairs, which every family finds trivially. Off by default
-    // so default output stays byte-identical across rounds.
+    // degenerate jaccard=1/dist=0 of exact copies. A recall check
+    // against exact pair truth needs such boundary pairs: on the
+    // default corpus a probe sample would catch only a handful of
+    // exact-copy truth pairs, which every family finds trivially. Off
+    // by default so default output stays byte-identical across rounds.
     // Mutation seeds from the partner's EFFECTIVE sid (r18): a doc at
     // id = 2 (mod 625) mutates doc id-1, but id-1 = 1 (mod 625) was
     // itself rewritten to reuse id-2's text — seeding that case from

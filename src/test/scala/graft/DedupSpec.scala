@@ -220,22 +220,6 @@ class DedupSpec extends SparkSuite {
     assert(self.get((1L, 2L)).contains(0))
   }
 
-  test("probe-restricted hamming pairs equal the full family filtered to probe members") {
-    import org.apache.spark.sql.functions.col
-    val t01 = graft.io.Tables(spark, "/root/testdata/sf0.001")
-    val full = Dedup.simhashHamming(t01).collect()
-      .map(r => ((r.getLong(0), r.getLong(1)), r.getInt(2))).toMap
-    val probes = full.keys.flatMap(p => Seq(p._1, p._2)).toSeq.distinct
-      .sorted.take(3) ++ Seq(9999999L) // incl. a probe with no pairs
-    val got = Dedup.blockedHammingPairs(Dedup.simhash(t01), "doc_id",
-      "simhash", nBlocks = 4, maxHam = 2,
-      leftOnly = Some(col("doc_id").isin(probes.map(Long.box): _*)))
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getInt(2))).toMap
-    val want = full.filter { case ((a, b), _) =>
-      probes.contains(a) || probes.contains(b) }
-    assert(got == want && want.nonEmpty)
-  }
-
   test("slack-1 hamming key chooser: combo on sparse words, single on dup-dense; both lossless") {
     import spark.implicits._
     // sparse regime: md5-spread 64-bit words, no planted dups — true

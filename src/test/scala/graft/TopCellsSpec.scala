@@ -1,16 +1,24 @@
 package graft
 
+import org.apache.spark.sql.execution.{GenerateExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.functions.GraftFunctions
 
 /** Pins graft_top_cells to the crossJoin(broadcast)+row_number window
   * form it replaced: same (cdist asc, cell asc) rule, same left-fold
   * dot arithmetic, so the assigned cell SETS must be identical —
-  * including on exact distance ties (duplicated centroids).
+  * including on exact distance ties (duplicated centroids). Also pins
+  * that the IVF retrieval builders assign probe cells with it.
   */
 class TopCellsSpec extends SparkSuite {
+
+  /** Walks AQE plans into their query stages. */
+  private object PlanNodes extends AdaptiveSparkPlanHelper
 
   private def windowAssign(vecs: Seq[(Long, Seq[Double])],
       cents: Seq[Seq[Double]], a: Int): Map[Long, Set[Int]] = {
@@ -121,6 +129,46 @@ class TopCellsSpec extends SparkSuite {
         s"pair distinct re-exchanges the candidate stream:\n$plan")
     }
   }
+
+  /** Executed plan of the localCheckpoint that materializes a builder's
+    * (probe_id, ...) result, captured by a QueryExecutionListener
+    * (Dataset.localCheckpoint runs as a named action). */
+  private def checkpointedPlan(build: => Unit): SparkPlan = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "localCheckpoint" &&
+            qe.analyzed.output.exists(_.name == "probe_id")) seen.add(qe)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      build
+      // listener events arrive on the listener bus, after the action
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (seen.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    assert(!seen.isEmpty, "no localCheckpoint of a probe_id result was observed")
+    seen.peek().executedPlan
+  }
+
+  for ((name, build) <- Seq[(String, graft.io.Tables => Any)](
+      "annIvf" -> (t => graft.sim.Similarity.annIvf(t)),
+      "annRangeIvf" -> (t => graft.sim.Similarity.annRangeIvf(t))))
+    test(s"$name assigns probe cells by a Generate(graft_top_cells) narrow map, no join") {
+      withLogLevel {
+        val t = graft.io.Tables(spark, "/root/testdata/sf0.001")
+        val plan = checkpointedPlan(build(t))
+        val nodes = PlanNodes.collect(plan) { case p => p }
+        assert(nodes.exists {
+          case g: GenerateExec => g.generator.exists(_.isInstanceOf[graft.functions.TopCells])
+          case _ => false
+        }, s"no Generate over graft_top_cells:\n$plan")
+        assert(!nodes.exists(p => p.isInstanceOf[BroadcastNestedLoopJoinExec] ||
+          p.isInstanceOf[CartesianProductExec]),
+          s"probe-cell assignment went back to a crossJoin form:\n$plan")
+      }
+    }
 
   test("a >= nlist returns all cells; rank order is (cdist asc, cell asc)") {
     withLogLevel {

@@ -300,7 +300,7 @@ def _band_ann_recall(con, out_dir, name):
     QuantizeSpec pin for the same metric. The measured operating
     points with the r15 derived knobs (nlistFor/nprobeFor) are 0.883
     at sf0.01 (nlist=16, nprobe=10) and 0.930 at sf0.1 (32/20) for
-    ann_ivf (AnnProbeScan sweep in SCALING.md), and int8 ADC scoring
+    ann_ivf (recall sweep in SCALING.md), and int8 ADC scoring
     costs ~1 recall point on top, so the 0.8 band has real margin at
     either scale; a silent quantizer/assignment regression tanks
     recall far below it. The baseline output is hash-checked by the
