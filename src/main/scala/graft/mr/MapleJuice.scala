@@ -17,8 +17,12 @@ import graft.io.Tables
   * Here the subprocess surface becomes a Scala lambda: `maple` is a
   * flatMap to key-value pairs (input splits and the per-key shuffle are
   * Spark's native ones — no `{prefix}_{key}` files, no fd-locked
-  * appends, sdfs/src/server.rs:517-563); `juice` is
-  * groupByKey.flatMapGroups. Worker count, chunk sizing
+  * appends, sdfs/src/server.rs:517-563; the registry map executors in
+  * [[Executors]] run once per split). `juice` runs a user fold as
+  * groupByKey.flatMapGroups (every pair crosses the shuffle); folds
+  * that are per-key sums — the registry reducers in [[Executors]] and
+  * the word count below — run as [[sumByKey]], a partial/final hash
+  * aggregate that combines map-side. Worker count, chunk sizing
   * (sdfs/src/leader.rs:370: ceil(lines/num_workers)) and re-execution
   * on failure (sdfs/src/leader.rs:359-439) all disappear into the
   * scheduler. Unlike the reference's `.take(1)` single-file truncation
@@ -46,18 +50,25 @@ object MapleJuice {
       .flatMapGroups((k: String, rows: Iterator[(String, String)]) =>
         udf(k, rows.map(_._2)).iterator.to(Iterator))
 
+  /** The per-key sum fold over a (key, value) view: (key, sum(value as
+    * long)), planned as a partial and a final HashAggregate. Under the
+    * session's ANSI mode (the Spark 4 default) a non-numeric value and
+    * a sum past 2^63 both throw instead of turning null or wrapping.
+    */
+  def sumByKey(kv: DataFrame): DataFrame =
+    kv.groupBy(col("key")).agg(sum(col("value").cast("long")).as("value"))
+
   /** The reference's wordcount demo (sdfs/executors/wordcountmap.py +
-    * wordcountreduce.py) run through the maple/juice surface; typed
-    * output lifted back to a DataFrame for the oracle compare.
+    * wordcountreduce.py) run through the maple/juice surface, folded
+    * by [[sumByKey]].
     */
   def wordCount(t: Tables): DataFrame = {
     import t.spark.implicits._
     val lines: Dataset[String] = t.documents.select($"text").as[String]
     val kv = maple(lines)(line =>
       line.split(" ").iterator.filter(_.nonEmpty).map(w => (w, "1")))
-    val counts = juice(kv)((k, vs) => Iterator((k, vs.size.toString)))
-    counts.toDF("word", "cnt_str")
-      .select(col("word"), col("cnt_str").cast("long").as("cnt"))
+    sumByKey(kv.toDF("key", "value"))
+      .select(col("key").as("word"), col("value").as("cnt"))
   }
 
   // Same semantics as the declarative word count → same oracle shape.

@@ -2,7 +2,8 @@ package graft.tools
 
 import scala.io.StdIn
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 
 /** Interactive command REPL — the reference's user surface
   * (sdfs/src/main.rs:218-306: whitespace-tokenized commands on a prompt
@@ -22,10 +23,11 @@ import org.apache.spark.sql.SparkSession
   *   delete <name>               drop the view (main.rs:243-245)
   *   maple <exe> <workers> <prefix> <view> [args...]
   *                               run a map executor: the reference's
-  *                               demo script names map to Scala lambdas
-  *                               (graft.mr.Executors); ANY OTHER <exe>
-  *                               that exists as a file runs as a
-  *                               subprocess pipe (graft.mr.PipeExec —
+  *                               demo script names map to Scala
+  *                               executors (graft.mr.Executors); ANY
+  *                               OTHER <exe> that exists as a file
+  *                               runs as a subprocess pipe
+  *                               (graft.mr.PipeExec —
   *                               .py under python3, else the file
   *                               itself; stdin=records,
   *                               stdout=key\tvalue). Output registered
@@ -35,15 +37,19 @@ import org.apache.spark.sql.SparkSession
   *                               scheduler's job.
   *   juice <exe> <workers> <prefix> <view> [delete?] [args...]
   *                               fold the (key, value) view <prefix>
-  *                               with a named reduce executor (or a
-  *                               user script path, piped with one
-  *                               key's lines contiguous); output
+  *                               with a named reduce executor (one
+  *                               DataFrame plan: fold and finalize) or
+  *                               a user script path, piped with one
+  *                               key's lines contiguous; output
   *                               registered as <view>. An optional
   *                               leading 0/1 delete-intermediates flag
   *                               (dead even in the reference — the
   *                               leader ignores it) is stripped;
-  *                               remaining args forward to the
-  *                               executor, same as maple
+  *                               remaining args forward to a user
+  *                               script, same as maple (the named
+  *                               reducers take none). Both commands
+  *                               cache their output view and count it
+  *                               in the action that fills the cache
   *   SELECT ALL FROM ds WHERE regex        (reference dialect)
   *   SELECT ALL FROM d1 d2 WHERE d1.f = d2.f
   *   SELECT ...                  any Spark SQL beyond the two
@@ -65,12 +71,23 @@ object Repl {
       s"${tb.name}\t${tb.tableType}\t${if (cached) "cached" else "on-demand"}"
     }
 
+  /** Cache `df`, register it as view `name`, and fill the cache in one
+    * action that also counts its rows for the status line: the view's
+    * cached plan runs once (an InMemoryTableScan, which builds the
+    * cache as it reads it) — no separate `count()` aggregate job.
+    */
+  private def cacheAndCount(spark: SparkSession, df: DataFrame, name: String): Long = {
+    df.cache().createOrReplaceTempView(name)
+    val qe = spark.table(name).queryExecution
+    SQLExecution.withNewExecutionId(qe, Some(s"fill $name"))(qe.toRdd.count())
+  }
+
   /** `maple <exe> ...` body, factored out so specs can run executors
     * headlessly. Resolution order mirrors the reference's "run any
     * script" contract (sdfs/src/server.rs:371-387): a pre-registered
-    * lambda name wins (the reference's own demo scripts); otherwise an
-    * existing file path runs as a subprocess via [[graft.mr.PipeExec]].
-    * Returns the status line the REPL prints.
+    * executor name wins (the reference's own demo scripts, run once per
+    * input split); otherwise an existing file path runs as a subprocess
+    * via [[graft.mr.PipeExec]]. Returns the status line the REPL prints.
     */
   def runMaple(spark: SparkSession, exe: String, prefix: String,
       view: String, args: Seq[String]): String = {
@@ -82,15 +99,13 @@ object Repl {
       case Some(_) if needsArg(exe) && args.isEmpty =>
         s"usage: maple $exe <workers> <prefix> <view> <arg> — $exe requires an argument"
       case Some(udf) =>
-        val kv = graft.mr.MapleJuice.maple(lines)(l => udf(l, args))
-        val out = kv.toDF("key", "value").cache() // one job: count + later reads
-        out.createOrReplaceTempView(prefix)
-        s"ok: maple $exe -> view $prefix (${out.count()} pairs)"
+        val kv = lines.mapPartitions(udf(_, args))
+        val n = cacheAndCount(spark, kv.toDF("key", "value"), prefix)
+        s"ok: maple $exe -> view $prefix ($n pairs)"
       case None if new java.io.File(exe).isFile =>
-        val out = graft.mr.PipeExec.pipeMaple(lines, exe, args)
-          .toDF("key", "value").cache()
-        out.createOrReplaceTempView(prefix)
-        s"ok: maple $exe (pipe) -> view $prefix (${out.count()} pairs)"
+        val kv = graft.mr.PipeExec.pipeMaple(lines, exe, args)
+        val n = cacheAndCount(spark, kv.toDF("key", "value"), prefix)
+        s"ok: maple $exe (pipe) -> view $prefix ($n pairs)"
       case None =>
         s"unknown map executor: $exe (known: " +
           s"${graft.mr.Executors.mapByName.keys.mkString(", ")}; " +
@@ -99,31 +114,23 @@ object Repl {
     }
   }
 
-  /** `juice <exe> ...` body — registry lambda or user-script pipe, same
-    * resolution as [[runMaple]]. Pipe reducers see one key's lines
-    * contiguous and keys sorted per partition (Hadoop-Streaming
-    * contract).
+  /** `juice <exe> ...` body — a registry reducer runs its DataFrame plan
+    * (fold and finalize) over the (key, value) view; a user script runs
+    * as a pipe that sees one key's lines contiguous and keys sorted per
+    * partition (Hadoop-Streaming contract).
     */
   def runJuice(spark: SparkSession, exe: String, prefix: String,
       out: String, args: Seq[String]): String = {
     import spark.implicits._
-    val kv = spark.table(prefix).select($"key", $"value").as[(String, String)]
+    val kv = spark.table(prefix).select($"key", $"value")
     graft.mr.Executors.reduceByName.get(exe) match {
-      case Some(udf) =>
-        val folded = graft.mr.MapleJuice.juice(kv)((k, vs) => udf(k, vs, args))
-          .toDF("key", "value")
-        // reference reducers post-process their key set (grand
-        // totals / percent formatting) — apply the same stage
-        val finalized = graft.mr.Executors.finalizeByName
-          .get(exe).map(f => f(folded)).getOrElse(folded)
-          .cache()
-        finalized.createOrReplaceTempView(out)
-        s"ok: juice $exe -> view $out (${finalized.count()} rows)"
+      case Some(plan) =>
+        val n = cacheAndCount(spark, plan(kv), out)
+        s"ok: juice $exe -> view $out ($n rows)"
       case None if new java.io.File(exe).isFile =>
-        val folded = graft.mr.PipeExec.pipeJuice(kv, exe, args)
-          .toDF("key", "value").cache()
-        folded.createOrReplaceTempView(out)
-        s"ok: juice $exe (pipe) -> view $out (${folded.count()} rows)"
+        val folded = graft.mr.PipeExec.pipeJuice(kv.as[(String, String)], exe, args)
+        val n = cacheAndCount(spark, folded.toDF("key", "value"), out)
+        s"ok: juice $exe (pipe) -> view $out ($n rows)"
       case None =>
         s"unknown reduce executor: $exe (known: " +
           s"${graft.mr.Executors.reduceByName.keys.mkString(", ")}; " +

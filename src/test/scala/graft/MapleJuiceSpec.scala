@@ -3,8 +3,12 @@ package graft
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, format_string, lit, sum}
+
 import graft.io.Tables
-import graft.mr.MapleJuice
+import graft.mr.{Executors, MapleJuice}
 import graft.ops.Relational
 
 /** The "same capabilities" guarantee for arbitrary user jobs
@@ -47,6 +51,40 @@ class MapleJuiceSpec extends SparkSuite {
         val expected = data.groupBy(_._1)
           .map { case (k, vs) => k -> vs.map(_._2.toLong).sum.toString }
         assert(folded == expected)
+      }
+    }
+  }
+
+  /** Each registry reducer as it ran before its DataFrame plan: a typed
+    * groupByKey fold followed by the name's finalize step. */
+  private def foldThenFinalize(name: String, kv: Dataset[(String, String)]): DataFrame = {
+    val sumFold = (k: String, vs: Iterator[String]) =>
+      Iterator((k, vs.map(_.toLong).sum.toString))
+    def long = col("value").cast("long")
+    name match {
+      case "selectreduce.py" =>
+        MapleJuice.juice(kv)((_, vs) => vs.map(v => ("filtered", v))).toDF("key", "value")
+      case "wordcountreduce.py" =>
+        MapleJuice.juice(kv)(sumFold).toDF("key", "value")
+          .agg(sum(long).cast("string").as("value"))
+          .select(lit("total").as("key"), col("value"))
+      case "Sdemo1reduce.py" | "Hdemo1reduce.py" =>
+        MapleJuice.juice(kv)(sumFold).toDF("key", "value")
+          .select(col("key"), format_string("%.2f%%",
+            long * lit(100.0) / sum(long).over(Window.partitionBy())).as("value"))
+    }
+  }
+
+  test("registry reduce plans == typed fold + finalize (property, 10 seeds)") {
+    import spark.implicits._
+    withLogLevel {
+      samples(10).foreach { data =>
+        val kv = data.toDS()
+        Executors.reduceByName.foreach { case (name, plan) =>
+          val got = plan(kv.toDF("key", "value")).as[(String, String)].collect().sorted
+          val want = foldThenFinalize(name, kv).as[(String, String)].collect().sorted
+          assert(got.toSeq == want.toSeq, name)
+        }
       }
     }
   }

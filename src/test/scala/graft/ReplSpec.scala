@@ -82,6 +82,99 @@ class ReplSpec extends SparkSuite {
     }
   }
 
+  test("registry executors run end-to-end: one-job maple, counted and cached views") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.functions.expr
+    import graft.tools.Repl
+    val sc = spark.sparkContext
+    val jobGroups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobGroups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    /** Spark jobs `f` runs, seen by the listener: a sentinel job's start
+      * is delivered after every earlier event. */
+    def jobsOf[A](group: String)(f: => A): (A, Int) = {
+      sc.setJobGroup(group, group)
+      val a = try f finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-end", "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!jobGroups.contains(s"$group-end") && System.nanoTime() < deadline)
+        Thread.sleep(1)
+      (a, jobGroups.toArray.count(_ == group))
+    }
+    val Count = """\((\d+) (?:pairs|rows)\)""".r.unanchored
+    def counted(status: String): Long = status match {
+      case Count(n) => n.toLong
+      case _ => fail(status)
+    }
+    def filled(view: String): Boolean =
+      spark.table(view).queryExecution.withCachedData.collectFirst {
+        case r: InMemoryRelation => r.cacheBuilder.isCachedColumnBuffersLoaded
+      }.contains(true)
+    def checkView(status: String, view: String): Unit = {
+      assert(status.startsWith("ok:"), status)
+      assert(counted(status) == spark.table(view).count(), status)
+      assert(filled(view), view)
+      assert(Repl.storeListing(spark).contains(s"$view\tTEMPORARY\tcached"), view)
+    }
+    val views = Seq("repl_sig", "repl_docs", "repl_kv", "repl_out", "repl_wkv",
+      "repl_wout", "repl_skv", "repl_sout")
+    sc.addSparkListener(listener)
+    withLogLevel {
+      try {
+        graft.io.GraftIO.readLines(spark, ExecutorsSpec.csvPath)
+          .createOrReplaceTempView("repl_sig")
+        val (m, mapleJobs) = jobsOf("repl-maple") {
+          Repl.runMaple(spark, "Sdemo1map.py", "repl_kv", "repl_sig", Seq("Radio"))
+        }
+        assert(mapleJobs == 1, m)
+        checkView(m, "repl_kv")
+        val j = Repl.runJuice(spark, "Sdemo1reduce.py", "repl_kv", "repl_out", Nil)
+        checkView(j, "repl_out")
+        val got = spark.table("repl_out").collect()
+          .map(r => r.getString(0) -> r.getString(1)).toMap
+        assert(got == ExecutorsSpec.percentOf(ExecutorsSpec.sdemo1Counts("Radio")))
+
+        // wordcount: the grand total equals the declarative token count;
+        // three splits, so per-split partial counts must add up across them
+        import spark.implicits._
+        val docs = Seq("The quick brown fox", "the LAZY dog's bone, the end", "",
+          "fox_trot 42 fox FOX", "Ünïcode wörds and ÉCOLE").toDF("text").repartition(3)
+        docs.createOrReplaceTempView("repl_docs")
+        val wm = Repl.runMaple(spark, "wordcountmap.py", "repl_wkv", "repl_docs", Nil)
+        checkView(wm, "repl_wkv")
+        checkView(Repl.runJuice(spark, "wordcountreduce.py", "repl_wkv", "repl_wout", Nil),
+          "repl_wout")
+        val tokens = docs.select(expr(
+          "CAST(sum(size(regexp_extract_all(lower(text), '\\\\w+', 0))) AS STRING)"))
+          .head.getString(0)
+        assert(spark.table("repl_wout").collect().map(r => (r.getString(0), r.getString(1)))
+          .toSeq == Seq(("total", tokens)))
+
+        // select: every golden line survives, every output line matches
+        checkView(Repl.runMaple(spark, "selectmap.py", "repl_skv", "repl_sig", Seq("Radio")),
+          "repl_skv")
+        checkView(Repl.runJuice(spark, "selectreduce.py", "repl_skv", "repl_sout", Nil),
+          "repl_sout")
+        val sel = spark.table("repl_sout").collect().map(r => (r.getString(0), r.getString(1)))
+        val golden = scala.io.Source.fromFile(getClass.getClassLoader
+          .getResource("Traffic_Signal_Intersections_filter").getPath, "UTF-8")
+        val goldenLines = try golden.getLines().filter(_.nonEmpty).toSet finally golden.close()
+        assert(sel.forall { case (k, v) => k == "filtered" && v.contains("Radio") })
+        assert(goldenLines.subsetOf(sel.map(_._2).toSet))
+      } finally {
+        sc.removeSparkListener(listener)
+        views.foreach { v =>
+          if (spark.catalog.tableExists(v)) spark.catalog.uncacheTable(v)
+          spark.catalog.dropTempView(v)
+        }
+      }
+    }
+  }
+
   test("store lists registered tables with cache status") {
     import spark.implicits._
     withLogLevel {
